@@ -416,8 +416,3 @@ def portable_hash40(col: Column | str) -> Column:
     mode, where bigint overflow raises instead of wrapping)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 10), 16, 10).cast("long")
-
-
-def sql_portable_hash40(expr: str) -> str:
-    """DuckDB-side twin of :func:`portable_hash40`."""
-    return f"CAST(concat('0x', substr(md5(CAST({expr} AS VARCHAR)), 1, 10)) AS BIGINT)"

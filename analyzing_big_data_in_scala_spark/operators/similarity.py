@@ -556,16 +556,6 @@ def _lsh_signatures(
     )
 
 
-def hyperplane_signatures(
-    df: DataFrame, n_planes: int = 8, id_col: str = "vec_id", vec_col: str = "embedding", dim: int = 64
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector (:func:`hyperplane_bucket`).
-    Returns (id_col, bucket)."""
-    return df.select(
-        F.col(id_col), hyperplane_bucket(F.col(vec_col), n_planes, dim).alias("bucket")
-    )
-
-
 def lsh_topk(
     corpus: DataFrame,
     query: DataFrame,

@@ -5,8 +5,8 @@ from . import relational_queries  # noqa: F401,E402
 from . import text_queries  # noqa: F401,E402
 from . import graph_queries  # noqa: F401,E402
 from . import pipeline_queries  # noqa: F401,E402
-from . import sketch_queries  # noqa: F401,E402
 from . import streaming_queries  # noqa: F401,E402
+from . import sketch_queries  # noqa: F401,E402
 
 # ---------------------------------------------------------------------------
 # Driver window ordering.

@@ -3833,13 +3833,11 @@ def events_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Training-export manifest: the packed shards are WRITTEN to a shard-partitioned parquet sink (repartitioned by shard -> exactly one file per shard, asserted) and the manifest (docs/tokens/id-range per shard) is derived from the read-back — the artifact a training job consumes, value-checking the sink round trip",
 )
 def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from ..operators.packing import pack_token_shards
 
-    out = tempfile.mkdtemp(prefix="shard_export_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="shard_export_", ignore_cleanup_errors=True) as out:
         curated = corpus_curation_pipeline(spark, sf_dir)
         packed = pack_token_shards(curated, "n_tokens", shard_tokens=2000).select(
             "doc_id", "n_tokens", "quality", "shard"
@@ -3860,8 +3858,6 @@ def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return manifest.localCheckpoint()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(

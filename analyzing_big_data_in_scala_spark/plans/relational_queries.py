@@ -1062,7 +1062,6 @@ def orders_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Parquet schema evolution (additive, schema-on-read): era-1 files written WITHOUT the channel column, era-2 appended WITH it, read back under mergeSchema's unified schema — era-1 rows NULL-fill, history is never rewritten (sources/evolution.py; the 100 TB alternative is a full-corpus backfill job)",
 )
 def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from ..sources.evolution import append_era, read_merged
@@ -1087,8 +1086,7 @@ def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "channel"
         ),
     )
-    stage = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="schema_evo_", ignore_cleanup_errors=True) as stage:
         append_era(era1, stage)  # era 1: no channel column in these footers
         append_era(era2, stage)  # era 2: adds the column; era 1 untouched
         merged = read_merged(spark, stage)
@@ -1114,8 +1112,6 @@ def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Materialize before the staged files are removed.
         return out.localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @query(

@@ -15,7 +15,6 @@ from ..operators.projection import random_projection
 from ..operators.sketches import CMS_DEPTH, CMS_WIDTH, cms_heavy_hitters
 from ..sources.catalog import load_table
 from .registry import query
-from .streaming_queries import _staged_schema
 from .text_queries import QUERY_TERMS, _SQL_TOKS
 
 _HASH64 = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
@@ -685,86 +684,53 @@ def orders_lineitem_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFr
     description="Streaming count-min maintenance: each micro-batch tokenizes and aggregates its own cells, folded into the standing 4x256 integer grid by cell-wise addition via the exactly-once foreachBatch wrapper; the drained grid is value-identical to the batch sketch (order-independent integer merge), probed with the exact top-20 terms",
 )
 def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from ..operators.merge import idempotent_foreach_batch
     from ..operators.sketches import cms_build, cms_estimate
     from ..operators.tfidf import token_table
+    from ..streaming import stream as ST
 
-    stage = tempfile.mkdtemp(prefix="stream_cms_")
-    ckpt = tempfile.mkdtemp(prefix="stream_cms_ckpt_")
-    try:
-        docs = _docs(spark, sf_dir).select("doc_id", "text")
-        docs.repartitionByRange(2, "doc_id").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    state: dict = {"grid": None}
 
-        state: dict = {"grid": None, "batches": 0}
-
-        def fold(batch_df, batch_id: int) -> None:
-            delta = cms_build(token_table(batch_df))
-            if state["grid"] is None:
-                state["grid"] = delta.localCheckpoint()
-            else:
-                merged = (
-                    state["grid"]
-                    .withColumnRenamed("cnt", "_a")
-                    .join(
-                        delta.withColumnRenamed("cnt", "_b"),
-                        ["row", "bucket"],
-                        "full_outer",
-                    )
-                    .select(
-                        "row",
-                        "bucket",
-                        (
-                            F.coalesce(F.col("_a"), F.lit(0).cast("long"))
-                            + F.coalesce(F.col("_b"), F.lit(0).cast("long"))
-                        ).alias("cnt"),
-                    )
-                )
-                state["grid"] = merged.localCheckpoint()
-            state["batches"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_cms_heavy_hitters: availableNow drain did not "
-                "terminate within 120s"
-            )
+    def fold(batch_df, batch_id: int) -> None:
+        delta = cms_build(token_table(batch_df))
         if state["grid"] is None:
-            raise RuntimeError("streaming_cms_heavy_hitters: no batches arrived")
-        from ..plans import streaming_queries as SQ
+            state["grid"] = delta.localCheckpoint()
+        else:
+            merged = (
+                state["grid"]
+                .withColumnRenamed("cnt", "_a")
+                .join(
+                    delta.withColumnRenamed("cnt", "_b"),
+                    ["row", "bucket"],
+                    "full_outer",
+                )
+                .select(
+                    "row",
+                    "bucket",
+                    (
+                        F.coalesce(F.col("_a"), F.lit(0).cast("long"))
+                        + F.coalesce(F.col("_b"), F.lit(0).cast("long"))
+                    ).alias("cnt"),
+                )
+            )
+            state["grid"] = merged.localCheckpoint()
 
-        SQ.LAST_FOLD_BATCHES = state["batches"]
-        exact = (
-            token_table(docs)
-            .groupBy("term")
-            .agg(F.count("*").alias("exact_cnt"))
-            .orderBy(F.desc("exact_cnt"), F.asc("term"))
-            .limit(20)
-        )
-        est = cms_estimate(state["grid"], exact.select("term"))
-        out = exact.join(est, "term").select(
-            "term",
-            "exact_cnt",
-            "cms_est",
-            (F.col("cms_est") - F.col("exact_cnt")).alias("overcount"),
-        )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with ST.staged_stream(spark, docs, "doc_id") as stream:
+        ST.fold_available_now(stream, fold)
+    exact = (
+        token_table(docs)
+        .groupBy("term")
+        .agg(F.count("*").alias("exact_cnt"))
+        .orderBy(F.desc("exact_cnt"), F.asc("term"))
+        .limit(20)
+    )
+    est = cms_estimate(state["grid"], exact.select("term"))
+    out = exact.join(est, "term").select(
+        "term",
+        "exact_cnt",
+        "cms_est",
+        (F.col("cms_est") - F.col("exact_cnt")).alias("overcount"),
+    )
+    return out.localCheckpoint()

@@ -6,37 +6,11 @@ stream/batch equivalence (SURVEY.md §5.6).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..streaming import stream as ST
 from .registry import query
-
-
-def _staged_schema(spark, stage: str, min_files: int = 2):
-    """Schema of a staged micro-batch fixture, ASSERTING the file count
-    (ADVICE r14): the 2-file staging leaves zero margin — if
-    repartitionByRange's sampling ever produced an empty partition,
-    Spark would write ONE file, the availableNow source would deliver
-    ONE batch, and the multi-batch incremental property these queries
-    test would collapse (loudly in tests, flakily). Catch it at the
-    staging site instead."""
-    reader = spark.read.parquet(stage)
-    n = len(reader.inputFiles())
-    if n < min_files:
-        raise AssertionError(
-            f"staged stream fixture at {stage} has {n} file(s); the "
-            f"multi-batch contract needs >= {min_files} — "
-            "repartitionByRange produced an empty partition"
-        )
-    return reader.schema
-
-# Micro-batch count of the most recent streaming_incremental_rollup run,
-# surfaced so tests can assert the fold actually ran incrementally
-# (>= 2 batches) rather than collapsing into one vacuous batch.
-LAST_FOLD_BATCHES: int | None = None
 
 
 @query(
@@ -54,8 +28,7 @@ LAST_FOLD_BATCHES: int | None = None
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ST.events_stream(spark, sf_dir)
     result = ST.windowed_counts(stream)
-    table = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    return ST.run_available_now(result, table, state_partitions=8)
+    return ST.run_available_now(result)
 
 
 @query(
@@ -79,8 +52,7 @@ def streaming_first_seen_per_user(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("user_id")
         .agg(F.min("event_id").alias("first_event_id"))
     )
-    table = f"stream_firstseen_{uuid.uuid4().hex[:8]}"
-    return ST.run_available_now(result, table, output_mode="update", state_partitions=8)
+    return ST.run_available_now(result, output_mode="update")
 
 
 @query(
@@ -97,8 +69,7 @@ def streaming_first_seen_custom_state(spark: SparkSession, sf_dir: str) -> DataF
 
     stream = ST.events_stream(spark, sf_dir)
     result = first_seen_per_user(stream)
-    table = f"stream_firstseen_cs_{uuid.uuid4().hex[:8]}"
-    return ST.run_available_now(result, table, output_mode="update", state_partitions=8)
+    return ST.run_available_now(result, output_mode="update")
 
 
 @query(
@@ -117,8 +88,7 @@ def streaming_sentiment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ST.events_stream(spark, sf_dir)
     labeled = ST.sentiment_stream(stream, text_col="event_type")
     result = labeled.groupBy("sentiment").agg(F.count("*").alias("n"))
-    table = f"stream_sentiment_{uuid.uuid4().hex[:8]}"
-    return ST.run_available_now(result, table, state_partitions=8).orderBy("sentiment")
+    return ST.run_available_now(result).orderBy("sentiment")
 
 
 @query(
@@ -160,8 +130,7 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
         .cast("long")
         .alias("gap_sec"),
     )
-    table = f"stream_attrib_{uuid.uuid4().hex[:8]}"
-    return ST.run_available_now(result, table, output_mode="append", state_partitions=8)
+    return ST.run_available_now(result, output_mode="append")
 
 
 @query(
@@ -234,8 +203,7 @@ def streaming_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataF
         .alias("gap_sec"),
         F.col("purchase_id").isNotNull().cast("int").alias("matched"),
     )
-    table = f"stream_attrib_outer_{uuid.uuid4().hex[:8]}"
-    return ST.run_available_now(result, table, output_mode="append", state_partitions=8)
+    return ST.run_available_now(result, output_mode="append")
 
 
 @query(
@@ -284,8 +252,7 @@ def streaming_dedup_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     dedup = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    table = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    mat = ST.run_available_now(dedup, table, output_mode="append", state_partitions=8)
+    mat = ST.run_available_now(dedup, output_mode="append")
     return mat.groupBy("event_type").agg(F.count("*").alias("n_users"))
 
 
@@ -316,8 +283,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum(F.round(F.col("value") * 10000).cast("bigint")).alias("sum_value_e4"),
     )
-    table = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    return ST.run_available_now(result, table, state_partitions=8)
+    return ST.run_available_now(result)
 
 
 @query(
@@ -334,95 +300,40 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
         GROUP BY bucket, event_type
     """,
-    description="Streaming continuous-aggregate maintenance (the ingest half of the hypertable rollup): per-micro-batch 10-min partial deltas folded into the standing aggregate via foreachBatch + apply_agg_delta — refresh cost tracks each BATCH, the standing aggregate is never recomputed from raw history; fixture staged as four files so availableNow delivers four real micro-batches",
+    description="Streaming continuous-aggregate maintenance (the ingest half of the hypertable rollup): per-micro-batch 10-min partial deltas folded into the standing aggregate via foreachBatch + apply_agg_delta — refresh cost tracks each BATCH, the standing aggregate is never recomputed from raw history; fixture staged as two files so availableNow delivers two real micro-batches",
 )
 def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.merge import apply_agg_delta
     from ..sources.catalog import load_events
 
-    # Stage the fixture as TWO files (r14, the r13 ingest lesson:
-    # the minimum multi-batch evidence): a single-file source is one
-    # availableNow batch, which would make the incremental fold vacuous.
-    stage = tempfile.mkdtemp(prefix="stream_incr_rollup_")
-    ckpt = tempfile.mkdtemp(prefix="stream_incr_ckpt_")
-    try:
-        ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-        ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+    ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
+    state: dict = {"agg": None}
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        delta = batch_df.groupBy(
+            F.floor(F.unix_timestamp("ts") / 600).cast("long").alias("bucket"),
+            "event_type",
+        ).agg(
+            F.count("*").alias("n"),
+            F.sum(F.round(F.col("value") * 10000).cast("bigint")).alias(
+                "sum_value_e4"
+            ),
         )
-
-        state: dict = {"agg": None, "batches": 0}
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            delta = batch_df.groupBy(
-                F.floor(F.unix_timestamp("ts") / 600).cast("long").alias("bucket"),
-                "event_type",
-            ).agg(
-                F.count("*").alias("n"),
-                F.sum(F.round(F.col("value") * 10000).cast("bigint")).alias(
-                    "sum_value_e4"
-                ),
+        if state["agg"] is not None:
+            delta = apply_agg_delta(
+                state["agg"],
+                delta,
+                keys=["bucket", "event_type"],
+                measures=["n", "sum_value_e4"],
+                count_col="n",
             )
-            if state["agg"] is None:
-                state["agg"] = delta.localCheckpoint()
-            else:
-                state["agg"] = apply_agg_delta(
-                    state["agg"],
-                    delta,
-                    keys=["bucket", "event_type"],
-                    measures=["n", "sum_value_e4"],
-                    count_col="n",
-                ).localCheckpoint()
-            state["batches"] += 1
+        state["agg"] = delta.localCheckpoint()
 
-        from ..operators.merge import idempotent_foreach_batch
-
-        # foreachBatch is at-least-once: a crash between the fold's side
-        # effect and the checkpoint commit redelivers the same batch, and
-        # the += delta fold would double-count it. The batch-id dedup
-        # wrapper makes the fold exactly-once (unit-pinned in
-        # test_merge.py).
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            # Timed out before the availableNow drain finished: fail fast
-            # with the real cause instead of returning a partially-folded
-            # aggregate that surfaces as a confusing oracle mismatch.
-            q.stop()
-            raise RuntimeError(
-                "streaming_incremental_rollup: availableNow drain did not "
-                "terminate within 120s"
-            )
-        if state["agg"] is None:
-            raise RuntimeError("streaming_incremental_rollup: no batches arrived")
-        # Surface the micro-batch count for tests: the incremental-fold
-        # property (agg_delta folded >= 2 times) is only meaningful if the
-        # staged 2-file source actually delivered multiple batches.
-        global LAST_FOLD_BATCHES
-        LAST_FOLD_BATCHES = state["batches"]
-        # The eager localCheckpoints above materialized the standing
-        # aggregate, so the result survives the staged files' removal.
-        return state["agg"]
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-# Micro-batch count of the most recent streaming_session_windows run
-# (tests assert >= 2: session merging across batches only actually
-# happened if the staged source delivered multiple micro-batches).
-LAST_SESSION_BATCHES: int | None = None
+    with ST.staged_stream(spark, ev, "event_id") as stream:
+        ST.fold_available_now(stream, fold)
+    # The eager localCheckpoints above materialized the standing
+    # aggregate, so the result survives the staged files' removal.
+    return state["agg"]
 
 
 @query(
@@ -453,72 +364,29 @@ LAST_SESSION_BATCHES: int | None = None
         FROM sess
         GROUP BY user_id, session_id
     """,
-    description="STREAMING session windows (watermarked F.session_window, 30-min gap): data-driven session state extended/merged across micro-batches — fixture staged as four time-ordered files so sessions genuinely span batch boundaries; drain == batch sessionization",
+    description="STREAMING session windows (watermarked F.session_window, 30-min gap): data-driven session state extended/merged across micro-batches — fixture staged as two time-ordered files so sessions genuinely span batch boundaries; drain == batch sessionization",
 )
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.catalog import load_events
 
-    # Stage the fixture as FOUR TIME-RANGED files (repartitionByRange on
-    # ts): a single-file source is one availableNow batch, which would
-    # make cross-batch session merging vacuous. Session fragments of the
-    # same user land in DIFFERENT batches whenever a session spans a
-    # file's time boundary — the state-merge path. NOTE the file SOURCE
-    # does not promise to deliver the ranged files in time order (it
-    # orders by modification time with arbitrary ties), so the watermark
-    # below is sized past the fixture's whole span: a 30-min watermark
-    # measurably dropped a nondeterministic fraction of rows when a
-    # later-range file arrived first. The watermarked operator path is
-    # still exercised; eviction simply never fires during the bounded
+    # Stage the fixture as TWO TIME-RANGED files (range on ts): session
+    # fragments of the same user land in DIFFERENT batches whenever a
+    # session spans the files' time boundary — the state-merge path. NOTE
+    # the file SOURCE does not promise to deliver the ranged files in time
+    # order (it orders by modification time with arbitrary ties), so the
+    # watermark below is sized past the fixture's whole span: a 30-min
+    # watermark measurably dropped a nondeterministic fraction of rows
+    # when a later-range file arrived first. The watermarked operator path
+    # is still exercised; eviction simply never fires during the bounded
     # drain, keeping it exactly batch-equivalent.
-    stage = tempfile.mkdtemp(prefix="stream_sessions_")
-    try:
-        ev = load_events(spark, sf_dir).select("user_id", "ts", "value")
-        ev.repartitionByRange(2, "ts").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+    ev = load_events(spark, sf_dir).select("user_id", "ts", "value")
+    with ST.staged_stream(spark, ev, "ts") as stream:
         if dict(stream.dtypes).get("ts") == "timestamp_ntz":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
         result = ST.session_window_counts(stream, gap="30 minutes", watermark="3650 days")
-        table = f"stream_sessions_{_uuid.uuid4().hex[:8]}"
-        # Inline drain (vs run_available_now) to keep the query HANDLE:
-        # recentProgress is read after termination for the micro-batch
-        # count, which tests assert >= 2 (cross-batch merging happened).
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                result.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(table)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_session_windows: availableNow drain did not "
-                "terminate within 120s"
-            )
         # Materialize before the staged files are removed.
-        out = spark.table(table).localCheckpoint()
-        global LAST_SESSION_BATCHES
-        LAST_SESSION_BATCHES = (
-            sum(1 for p in q.recentProgress if p.numInputRows > 0) or None
-        )
-        return out
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        return ST.run_available_now(result).localCheckpoint()
 
 
 # Which stateful API the most recent streaming_user_totals run executed:
@@ -545,39 +413,24 @@ LAST_TOTALS_API: str | None = None
     description="Custom stateful running totals per user, SELF-ACTIVATING across stateful APIs: transformWithStateInPandas (Spark-4 StatefulProcessor) where protobuf exists, applyInPandasWithState otherwise — identical contract and values, staged 2-file source (r14: the minimum multi-batch evidence, per-batch job-chain cost halved) so state genuinely accumulates across micro-batches",
 )
 def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from pyspark.sql import Window as W
 
     from ..sources.catalog import load_events
     from ..streaming import stateful as SF
 
-    # Stage as TWO files (r14; range by event_id — no event-time semantics
-    # here, timeMode None) so update-mode state genuinely accumulates
-    # across micro-batches rather than one vacuous batch.
-    stage = tempfile.mkdtemp(prefix="stream_totals_")
-    try:
-        ev = load_events(spark, sf_dir).select("user_id", "event_id", "value")
-        ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        global LAST_TOTALS_API
+    global LAST_TOTALS_API
+    # Staged range by event_id — no event-time semantics here, timeMode
+    # None — so update-mode state genuinely accumulates across
+    # micro-batches rather than one vacuous batch.
+    ev = load_events(spark, sf_dir).select("user_id", "event_id", "value")
+    with ST.staged_stream(spark, ev, "event_id") as stream:
         if SF.tws_available():
             result = SF.user_event_totals_tws(stream)
             LAST_TOTALS_API = "tws"
         else:
             result = SF.user_event_totals_apws(stream)
             LAST_TOTALS_API = "apws"
-        table = f"stream_totals_{_uuid.uuid4().hex[:8]}"
-        drained = ST.run_available_now(
-            result, table, output_mode="update", state_partitions=8
-        )
+        drained = ST.run_available_now(result, output_mode="update")
         # Update mode re-emits a user's RUNNING total each batch they
         # appear in; the final total is the emission with the highest
         # n_events (strictly increasing per key). Materialize before the
@@ -589,8 +442,6 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_rk")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @query(
@@ -612,86 +463,54 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Streaming ANN index ingest: embedding micro-batches folded into the persisted LSH index via exactly-once foreachBatch (batch 1 builds, later batches append — per-batch cost tracks the batch); drained index agrees row-for-row with on-the-fly LSH over the full corpus",
 )
 def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators import similarity as S
-    from ..operators.merge import idempotent_foreach_batch
     from ..sources.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    stage = tempfile.mkdtemp(prefix="stream_ann_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ann_ckpt_")
     prefix = "lshs_index"
-    try:
-        # 2 staged files = 2 micro-batches: batch 1 exercises BUILD,
-        # batch 2 APPEND — the full contract at half the per-batch fold
-        # job-chain cost (the streaming_ivfpq_index_ingest r10 lesson:
-        # batch COUNT, not batch size, is the drain's wall).
-        emb.select("vec_id", "embedding").repartitionByRange(2, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        state = {"built": False}
+    state = {"built": False}
 
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            # localCheckpoint: the file-source batch frame is re-read
-            # twice inside build/append (signatures + vectors); pinning it
-            # also survives the staged files' later removal. LAZY (r15):
-            # the take(1) emptiness probe right below materializes the
-            # blocks inside its own job — eager paid one extra blocking
-            # job per micro-batch for the same blocks (the fixpoint-loop
-            # pattern applied to the drain's fold chain).
-            batch = batch_df.localCheckpoint(eager=False)
-            if not batch.take(1):
-                return
-            if not state["built"]:
-                S.build_lsh_index(batch, prefix=prefix)
-                state["built"] = True
-            else:
-                S.lsh_index_append(batch, prefix=prefix)
-
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_ann_index_ingest: availableNow drain did not "
-                "terminate within 120s"
-            )
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        # localCheckpoint: the file-source batch frame is re-read twice
+        # inside build/append (signatures + vectors). LAZY (r15): the
+        # take(1) emptiness probe right below materializes the blocks
+        # inside its own job — eager paid one extra blocking job per
+        # micro-batch for the same blocks (the fixpoint-loop pattern
+        # applied to the drain's fold chain).
+        batch = batch_df.localCheckpoint(eager=False)
+        if not batch.take(1):
+            return
         if not state["built"]:
-            raise RuntimeError("streaming_ann_index_ingest: no batches arrived")
-        # foreachBatch runs `fold` in a CLONED SparkSession: the DROP +
-        # saveAsTable inside build/append invalidate the CLONE's relation
-        # cache, not this session's — without a refresh, a prior
-        # invocation's cached file listing for these tables serves deleted
-        # part files (FAILED_READ_FILE.FILE_NOT_EXIST, seen in bench
-        # re-runs within one JVM).
-        for t in ("sig", "vecs", "meta"):
-            spark.catalog.refreshTable(f"{prefix}_{t}")
-        probes = emb.filter(F.col("vec_id") < 3)
-        indexed = S.lsh_topk_indexed(spark, probes, prefix=prefix, k=10)
-        live = S.lsh_topk(emb, probes, k=10)
-        both = indexed.join(live, ["query_id", "vec_id", "cosine", "rank"], "left_semi")
-        n_idx = indexed.groupBy("query_id").agg(F.count("*").alias("n_indexed"))
-        n_agr = both.groupBy("query_id").agg(F.count("*").alias("n_agree"))
-        return n_idx.join(n_agr, "query_id", "left").select(
-            "query_id",
-            F.col("n_indexed").cast("long").alias("n_indexed"),
-            F.coalesce("n_agree", F.lit(0)).cast("long").alias("n_agree"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            S.build_lsh_index(batch, prefix=prefix)
+            state["built"] = True
+        else:
+            S.lsh_index_append(batch, prefix=prefix)
+
+    # 2 staged files = 2 micro-batches: batch 1 exercises BUILD, batch 2
+    # APPEND — the full contract at half the per-batch fold job-chain cost
+    # (the streaming_ivfpq_index_ingest r10 lesson: batch COUNT, not batch
+    # size, is the drain's wall).
+    with ST.staged_stream(spark, emb.select("vec_id", "embedding"), "vec_id") as stream:
+        ST.fold_available_now(stream, fold)
+    # foreachBatch runs `fold` in a CLONED SparkSession: the DROP +
+    # saveAsTable inside build/append invalidate the CLONE's relation
+    # cache, not this session's — without a refresh, a prior invocation's
+    # cached file listing for these tables serves deleted part files
+    # (FAILED_READ_FILE.FILE_NOT_EXIST, seen in bench re-runs within one
+    # JVM).
+    for t in ("sig", "vecs", "meta"):
+        spark.catalog.refreshTable(f"{prefix}_{t}")
+    probes = emb.filter(F.col("vec_id") < 3)
+    indexed = S.lsh_topk_indexed(spark, probes, prefix=prefix, k=10)
+    live = S.lsh_topk(emb, probes, k=10)
+    both = indexed.join(live, ["query_id", "vec_id", "cosine", "rank"], "left_semi")
+    n_idx = indexed.groupBy("query_id").agg(F.count("*").alias("n_indexed"))
+    n_agr = both.groupBy("query_id").agg(F.count("*").alias("n_agree"))
+    return n_idx.join(n_agr, "query_id", "left").select(
+        "query_id",
+        F.col("n_indexed").cast("long").alias("n_indexed"),
+        F.coalesce("n_agree", F.lit(0)).cast("long").alias("n_agree"),
+    ).localCheckpoint()
 
 
 @query(
@@ -718,11 +537,8 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Streaming IVF-PQ index ingest: geometry trained offline on a fixed sample (fitted-state indexes cannot train on a nondeterministically-ordered stream — documented), embedding micro-batches appended with the STORED codebooks/centroids via exactly-once foreachBatch; drained index agrees row-for-row with an on-the-fly search over inline-recomputed full-corpus codes",
 )
 def streaming_ivfpq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators import pq as PQ
-    from ..operators.merge import idempotent_foreach_batch
+    from ..operators.similarity import spherical_assign
     from ..sources.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -731,88 +547,59 @@ def streaming_ivfpq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = "ivfpqs_index"
     PQ.build_ivfpq_index(sample, prefix=prefix)
 
-    stage = tempfile.mkdtemp(prefix="stream_ivfpq_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ivfpq_ckpt_")
-    try:
-        # 2 staged files = 2 micro-batches: the minimum that still proves
-        # appends COMMUTE across batches (the contract), at half the
-        # drain's per-batch fixed cost — r9 bench decomposition measured
-        # ~1.8 s/batch of job overhead (localCheckpoint + anti-join +
-        # encode + bucketed append) against microseconds of actual
-        # compute, so batch COUNT, not batch size, was the wall
-        # (VERDICT r9 item 3: 23.3 s, the most expensive recurring bench
-        # entry). Single-batch would be cheaper still but degenerates
-        # the query to "build twice".
-        rest.select("vec_id", "embedding").repartitionByRange(2, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        # Lazy checkpoint + take(1) = one job per batch (r15) — see the
+        # LSH ingest fold above; append consumers then read the persisted
+        # blocks.
+        batch = batch_df.localCheckpoint(eager=False)
+        if not batch.take(1):
+            return
+        PQ.ivfpq_index_append(batch, prefix=prefix)
 
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            # Lazy checkpoint + take(1) = one job per batch (r15) — see
-            # the LSH ingest fold above; append consumers then read the
-            # persisted blocks.
-            batch = batch_df.localCheckpoint(eager=False)
-            if not batch.take(1):
-                return
-            PQ.ivfpq_index_append(batch, prefix=prefix)
-
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_ivfpq_index_ingest: availableNow drain did not "
-                "terminate within 120s"
-            )
-        # Same cloned-session relation-cache hazard as the LSH ingest:
-        # refresh the appended/stored tables in THIS session.
-        for t in ("codes", "centroids", "codebook"):
-            spark.catalog.refreshTable(f"{prefix}_{t}")
-        probes = emb.filter(F.col("vec_id") < 3)
-        # The 30-row indexed result feeds TWO consumers (the left-semi
-        # agreement probe and the n_indexed aggregate): without the
-        # lineage cut the whole ADC-scan + rerank chain executes once per
-        # consumer (multi-consumer re-plan; r10 A/B measured the chain
-        # ~2 s warm per execution at sf0.1).
-        indexed = PQ.ivfpq_topk_indexed(
-            spark, emb, probes, prefix=prefix, k=10, nprobe=4
-        ).localCheckpoint(eager=False)
-        # On-the-fly twin: SAME stored geometry, codes recomputed inline
-        # over the full corpus — agreement proves the streamed appends
-        # encoded exactly what a batch encode would have.
-        cents = spark.table(f"{prefix}_centroids")
-        cb = spark.table(f"{prefix}_codebook")
-        from ..operators.similarity import spherical_assign
-
-        cells = spherical_assign(emb, cents).select(
-            "vec_id", F.col("centroid_id").alias("cell")
-        )
-        live_codes = PQ.pq_encode(emb, cb, m=16).join(cells, "vec_id")
-        live = PQ.ivfpq_topk(
-            emb, probes, k=10, nprobe=4,
-            index={"centroids": cents, "codebook": cb, "codes": live_codes},
-        )
-        both = indexed.join(live, ["query_id", "vec_id", "cosine", "rank"], "left_semi")
-        n_idx = indexed.groupBy("query_id").agg(F.count("*").alias("n_indexed"))
-        n_agr = both.groupBy("query_id").agg(F.count("*").alias("n_agree"))
-        return n_idx.join(n_agr, "query_id", "left").select(
-            "query_id",
-            F.col("n_indexed").cast("long").alias("n_indexed"),
-            F.coalesce("n_agree", F.lit(0)).cast("long").alias("n_agree"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # 2 staged files = 2 micro-batches: the minimum that still proves
+    # appends COMMUTE across batches (the contract), at half the drain's
+    # per-batch fixed cost — r9 bench decomposition measured ~1.8 s/batch
+    # of job overhead (localCheckpoint + anti-join + encode + bucketed
+    # append) against microseconds of actual compute, so batch COUNT, not
+    # batch size, was the wall (VERDICT r9 item 3: 23.3 s, the most
+    # expensive recurring bench entry). Single-batch would be cheaper
+    # still but degenerates the query to "build twice".
+    with ST.staged_stream(spark, rest.select("vec_id", "embedding"), "vec_id") as stream:
+        ST.fold_available_now(stream, fold)
+    # Same cloned-session relation-cache hazard as the LSH ingest:
+    # refresh the appended/stored tables in THIS session.
+    for t in ("codes", "centroids", "codebook"):
+        spark.catalog.refreshTable(f"{prefix}_{t}")
+    probes = emb.filter(F.col("vec_id") < 3)
+    # The 30-row indexed result feeds TWO consumers (the left-semi
+    # agreement probe and the n_indexed aggregate): without the lineage
+    # cut the whole ADC-scan + rerank chain executes once per consumer
+    # (multi-consumer re-plan; r10 A/B measured the chain ~2 s warm per
+    # execution at sf0.1).
+    indexed = PQ.ivfpq_topk_indexed(
+        spark, emb, probes, prefix=prefix, k=10, nprobe=4
+    ).localCheckpoint(eager=False)
+    # On-the-fly twin: SAME stored geometry, codes recomputed inline over
+    # the full corpus — agreement proves the streamed appends encoded
+    # exactly what a batch encode would have.
+    cents = spark.table(f"{prefix}_centroids")
+    cb = spark.table(f"{prefix}_codebook")
+    cells = spherical_assign(emb, cents).select(
+        "vec_id", F.col("centroid_id").alias("cell")
+    )
+    live_codes = PQ.pq_encode(emb, cb, m=16).join(cells, "vec_id")
+    live = PQ.ivfpq_topk(
+        emb, probes, k=10, nprobe=4,
+        index={"centroids": cents, "codebook": cb, "codes": live_codes},
+    )
+    both = indexed.join(live, ["query_id", "vec_id", "cosine", "rank"], "left_semi")
+    n_idx = indexed.groupBy("query_id").agg(F.count("*").alias("n_indexed"))
+    n_agr = both.groupBy("query_id").agg(F.count("*").alias("n_agree"))
+    return n_idx.join(n_agr, "query_id", "left").select(
+        "query_id",
+        F.col("n_indexed").cast("long").alias("n_indexed"),
+        F.coalesce("n_agree", F.lit(0)).cast("long").alias("n_agree"),
+    ).localCheckpoint()
 
 
 def _streaming_trend_oracle() -> str:
@@ -855,58 +642,26 @@ def _streaming_trend_oracle() -> str:
     description="Streaming incremental OLS trend: per-micro-batch sufficient-statistic deltas (n, sx, sy, sxy, sxx, syy — purely ADDITIVE under fixed-epoch centering) folded into a standing stats table via exactly-once foreachBatch, finalized with the shared slope/correlation expression trees — refresh cost tracks each batch, the answer equals a one-shot batch computation bit-for-bit (the mergeability claim of operators/sequence.trend_sufficient_stats, proven by the oracle)",
 )
 def streaming_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..operators.merge import apply_agg_delta, idempotent_foreach_batch
+    from ..operators.merge import apply_agg_delta
     from ..operators.sequence import trend_from_stats, trend_sufficient_stats
     from ..sources.catalog import load_events
 
-    stage = tempfile.mkdtemp(prefix="stream_trend_")
-    ckpt = tempfile.mkdtemp(prefix="stream_trend_ckpt_")
-    try:
-        ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-        # 2 staged files = 2 real micro-batches (a single file would make
-        # the incremental fold vacuous; the r10 ingest lesson says batch
-        # COUNT is the drain's wall, so 2 is the honest minimum).
-        ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        state: dict = {"stats": None}
-        measures = ["n", "sx", "sy", "sxy", "sxx", "syy"]
+    ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
+    state: dict = {"stats": None}
+    measures = ["n", "sx", "sy", "sxy", "sxx", "syy"]
 
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            delta = trend_sufficient_stats(batch_df)
-            if state["stats"] is None:
-                state["stats"] = delta.localCheckpoint()
-            else:
-                state["stats"] = apply_agg_delta(
-                    state["stats"], delta,
-                    keys=["event_type"], measures=measures, count_col="n",
-                ).localCheckpoint()
-
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_value_trend: availableNow drain did not "
-                "terminate within 120s"
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        delta = trend_sufficient_stats(batch_df)
+        if state["stats"] is not None:
+            delta = apply_agg_delta(
+                state["stats"], delta,
+                keys=["event_type"], measures=measures, count_col="n",
             )
-        if state["stats"] is None:
-            raise RuntimeError("streaming_value_trend: no batches arrived")
-        return trend_from_stats(state["stats"]).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        state["stats"] = delta.localCheckpoint()
+
+    with ST.staged_stream(spark, ev, "event_id") as stream:
+        ST.fold_available_now(stream, fold)
+    return trend_from_stats(state["stats"]).localCheckpoint()
 
 
 @query(
@@ -928,92 +683,55 @@ def streaming_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Streaming sketch maintenance (the ingest half of the HLL rollup): each micro-batch aggregates to per-(type, day) HLL partials that hll_union into the standing sketch table via an exactly-once foreachBatch fold — per-batch cost tracks the batch, the standing state is KB sketches, and cross-batch dedup is free because sketch union is idempotent-per-key and order-independent",
 )
 def streaming_hll_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..operators.merge import idempotent_foreach_batch
     from ..sources.catalog import load_events
 
-    stage = tempfile.mkdtemp(prefix="stream_hll_")
-    ckpt = tempfile.mkdtemp(prefix="stream_hll_ckpt_")
-    try:
-        ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "user_id")
-        # Two staged files -> two real availableNow micro-batches (the
-        # incremental-union property is vacuous on a single batch; two is
-        # the minimum non-vacuous evidence — r13 ingest lesson, r14).
-        ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+    ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "user_id")
+    state: dict = {"sk": None}
 
-        state: dict = {"sk": None, "batches": 0}
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            delta = batch_df.groupBy(
-                "event_type",
-                F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
-            ).agg(F.hll_sketch_agg("user_id").alias("_skb"))
-            if state["sk"] is None:
-                state["sk"] = delta.withColumnRenamed("_skb", "_sk").localCheckpoint()
-            else:
-                merged = (
-                    state["sk"]
-                    .join(delta, ["event_type", "day"], "full_outer")
-                    .select(
-                        "event_type",
-                        "day",
-                        F.expr(
-                            "CASE WHEN _sk IS NULL THEN _skb "
-                            "WHEN _skb IS NULL THEN _sk "
-                            "ELSE hll_union(_sk, _skb) END"
-                        ).alias("_sk"),
-                    )
-                )
-                state["sk"] = merged.localCheckpoint()
-            state["batches"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_hll_sketch_maintenance: availableNow drain did not "
-                "terminate within 120s"
-            )
-        if state["sk"] is None:
-            raise RuntimeError("streaming_hll_sketch_maintenance: no batches arrived")
-        global LAST_FOLD_BATCHES
-        LAST_FOLD_BATCHES = state["batches"]
-        merged = state["sk"].groupBy("event_type").agg(
-            F.hll_sketch_estimate(F.hll_union_agg("_sk")).alias("_est"),
-            F.count("*").alias("n_days"),
-        )
-        exact = ev.groupBy("event_type").agg(
-            F.count_distinct("user_id").alias("exact_users")
-        )
-        out = exact.join(merged, "event_type").select(
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        delta = batch_df.groupBy(
             "event_type",
-            "exact_users",
-            "n_days",
-            (
-                F.abs(F.col("_est") - F.col("exact_users")) * F.lit(100)
-                <= F.col("exact_users") * F.lit(5)
+            F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
+        ).agg(F.hll_sketch_agg("user_id").alias("_skb"))
+        if state["sk"] is None:
+            state["sk"] = delta.withColumnRenamed("_skb", "_sk").localCheckpoint()
+        else:
+            merged = (
+                state["sk"]
+                .join(delta, ["event_type", "day"], "full_outer")
+                .select(
+                    "event_type",
+                    "day",
+                    F.expr(
+                        "CASE WHEN _sk IS NULL THEN _skb "
+                        "WHEN _skb IS NULL THEN _sk "
+                        "ELSE hll_union(_sk, _skb) END"
+                    ).alias("_sk"),
+                )
             )
-            .cast("int")
-            .alias("hll_stream_ok"),
+            state["sk"] = merged.localCheckpoint()
+
+    with ST.staged_stream(spark, ev, "event_id") as stream:
+        ST.fold_available_now(stream, fold)
+    merged = state["sk"].groupBy("event_type").agg(
+        F.hll_sketch_estimate(F.hll_union_agg("_sk")).alias("_est"),
+        F.count("*").alias("n_days"),
+    )
+    exact = ev.groupBy("event_type").agg(
+        F.count_distinct("user_id").alias("exact_users")
+    )
+    out = exact.join(merged, "event_type").select(
+        "event_type",
+        "exact_users",
+        "n_days",
+        (
+            F.abs(F.col("_est") - F.col("exact_users")) * F.lit(100)
+            <= F.col("exact_users") * F.lit(5)
         )
-        # Materialize before the staged files are removed.
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        .cast("int")
+        .alias("hll_stream_ok"),
+    )
+    return out.localCheckpoint()
 
 
 @query(
@@ -1048,76 +766,43 @@ def streaming_hll_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     description="Streaming user-concentration HHI per event type (bot-flood / dominance monitor): per-micro-batch (type, user) cents deltas — purely additive — fold into standing state via exactly-once foreachBatch (the streaming-trend mergeability pattern); finalize is the shared HHI double tree over exact BIGINT sum-of-squares; state is bounded by active (type, user) pairs, refresh cost tracks each batch, and the drained answer equals the one-shot batch computation bit-for-bit",
 )
 def streaming_user_value_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..operators.merge import apply_agg_delta, idempotent_foreach_batch
+    from ..operators.merge import apply_agg_delta
     from ..sources.catalog import load_events
     from .relational_queries import HHI_PPM_SQL
 
-    stage = tempfile.mkdtemp(prefix="stream_hhi_")
-    ckpt = tempfile.mkdtemp(prefix="stream_hhi_ckpt_")
-    try:
-        ev = load_events(spark, sf_dir).select("event_id", "event_type", "user_id", "value")
-        # 2 staged files = 2 real micro-batches (the honest minimum for a
-        # non-vacuous incremental fold; batch COUNT is the drain's wall).
-        ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        state: dict = {"sums": None}
+    ev = load_events(spark, sf_dir).select("event_id", "event_type", "user_id", "value")
+    state: dict = {"sums": None}
 
-        def fold(batch_df, batch_id: int) -> None:
-            delta = batch_df.groupBy("event_type", "user_id").agg(
-                F.count("*").alias("n"),
-                F.sum(F.round(F.col("value") * 100).cast("long")).alias("s"),
+    def fold(batch_df, batch_id: int) -> None:
+        delta = batch_df.groupBy("event_type", "user_id").agg(
+            F.count("*").alias("n"),
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("s"),
+        )
+        if state["sums"] is not None:
+            delta = apply_agg_delta(
+                state["sums"], delta,
+                keys=["event_type", "user_id"], measures=["n", "s"],
+                count_col="n",
             )
-            if state["sums"] is None:
-                state["sums"] = delta.localCheckpoint()
-            else:
-                state["sums"] = apply_agg_delta(
-                    state["sums"], delta,
-                    keys=["event_type", "user_id"], measures=["n", "s"],
-                    count_col="n",
-                ).localCheckpoint()
+        state["sums"] = delta.localCheckpoint()
 
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with ST.staged_stream(spark, ev, "event_id") as stream:
+        ST.fold_available_now(stream, fold)
+    stats = state["sums"].groupBy("event_type").agg(
+        F.count("*").alias("n_users"),
+        F.sum(F.col("s") * F.col("s")).alias("s_sq"),
+        F.sum("s").alias("s_tot"),
+    )
+    return (
+        stats.filter(F.col("s_tot") > 0)
+        .select(
+            "event_type",
+            "n_users",
+            F.col("s_tot").alias("value_e2_total"),
+            F.expr(HHI_PPM_SQL).alias("hhi_ppm"),
         )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_user_value_hhi: availableNow drain did not "
-                "terminate within 120s"
-            )
-        if state["sums"] is None:
-            raise RuntimeError("streaming_user_value_hhi: no batches arrived")
-        stats = state["sums"].groupBy("event_type").agg(
-            F.count("*").alias("n_users"),
-            F.sum(F.col("s") * F.col("s")).alias("s_sq"),
-            F.sum("s").alias("s_tot"),
-        )
-        return (
-            stats.filter(F.col("s_tot") > 0)
-            .select(
-                "event_type",
-                "n_users",
-                F.col("s_tot").alias("value_e2_total"),
-                F.expr(HHI_PPM_SQL).alias("hhi_ppm"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        .localCheckpoint()
+    )
 
 
 @query(
@@ -1162,73 +847,40 @@ def streaming_user_value_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Streaming EXACT median/p90 per event type (sketch-free): the standing state is the per-(type, cents) count table — the mergeable sufficient statistic for exact order statistics on bounded domains — folded via exactly-once apply_agg_delta (counts commute, so nondeterministic file order is harmless); finalize is the r11 frequency-table rank decomposition; state bounded by the value domain, not stream length (unbounded domains take the KLL sketch path); drained fold equals the one-shot batch bit-for-bit",
 )
 def streaming_value_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..operators.merge import apply_agg_delta, idempotent_foreach_batch
+    from ..operators.merge import apply_agg_delta
     from ..operators.quantiles import freq_table_rank_stats_from_counts
     from ..sources.catalog import load_events
 
-    stage = tempfile.mkdtemp(prefix="stream_quant_")
-    ckpt = tempfile.mkdtemp(prefix="stream_quant_ckpt_")
-    try:
-        ev = load_events(spark, sf_dir).select("event_id", "event_type", "value")
-        ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        state: dict = {"counts": None}
+    ev = load_events(spark, sf_dir).select("event_id", "event_type", "value")
+    state: dict = {"counts": None}
 
-        def fold(batch_df, batch_id: int) -> None:
-            delta = batch_df.groupBy(
-                "event_type",
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            ).agg(F.count("*").alias("n"))
-            if state["counts"] is None:
-                state["counts"] = delta.localCheckpoint()
-            else:
-                state["counts"] = apply_agg_delta(
-                    state["counts"], delta,
-                    keys=["event_type", "cents"], measures=["n"],
-                    count_col="n",
-                ).localCheckpoint()
+    def fold(batch_df, batch_id: int) -> None:
+        delta = batch_df.groupBy(
+            "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("cents"),
+        ).agg(F.count("*").alias("n"))
+        if state["counts"] is not None:
+            delta = apply_agg_delta(
+                state["counts"], delta,
+                keys=["event_type", "cents"], measures=["n"],
+                count_col="n",
+            )
+        state["counts"] = delta.localCheckpoint()
 
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_value_exact_quantiles: availableNow drain did "
-                "not terminate within 120s"
-            )
-        if state["counts"] is None:
-            raise RuntimeError(
-                "streaming_value_exact_quantiles: no batches arrived"
-            )
-        stats = freq_table_rank_stats_from_counts(
-            state["counts"], "event_type", "cents", "n",
-            rank_exprs={
-                "median_cents": "(n + 1) DIV 2",
-                "p90_cents": "(n * 9 + 9) DIV 10",
-            },
-            extra_aggs={"min_cents": F.min("v"), "max_cents": F.max("v")},
-        )
-        return stats.select(
-            "event_type", "n", "min_cents", "median_cents", "p90_cents",
-            "max_cents",
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with ST.staged_stream(spark, ev, "event_id") as stream:
+        ST.fold_available_now(stream, fold)
+    stats = freq_table_rank_stats_from_counts(
+        state["counts"], "event_type", "cents", "n",
+        rank_exprs={
+            "median_cents": "(n + 1) DIV 2",
+            "p90_cents": "(n * 9 + 9) DIV 10",
+        },
+        extra_aggs={"min_cents": F.min("v"), "max_cents": F.max("v")},
+    )
+    return stats.select(
+        "event_type", "n", "min_cents", "median_cents", "p90_cents",
+        "max_cents",
+    ).localCheckpoint()
 
 
 @query(
@@ -1260,73 +912,38 @@ def streaming_value_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
     description="Streaming KLL quantile maintenance (the unbounded-domain twin of streaming_value_exact_quantiles, per that contract): micro-batch per-(type, day) KLL partials fold into standing KB sketches via pairwise kll_sketch_merge under an exactly-once foreachBatch; finalize shares events_kll_value_rollup's merge + judge tree, asserting exact stream length (the exactly-once witness) and 3% rank accuracy in-plan; standing state is days x KB regardless of stream length or value domain",
 )
 def streaming_kll_value_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..operators.merge import idempotent_foreach_batch
     from ..operators.sketches import kll_rollup_finalize, kll_value_base
     from ..sources.catalog import load_events
 
-    stage = tempfile.mkdtemp(prefix="stream_kll_")
-    ckpt = tempfile.mkdtemp(prefix="stream_kll_ckpt_")
-    try:
-        ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-        # Four staged files -> four real availableNow micro-batches: the
-        # same (type, day) cell arrives in several batches (files are
-        # keyed by event_id, not day), so the pairwise-merge collision
-        # branch is genuinely exercised, not vacuous.
-        ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(stage)
-        schema = _staged_schema(spark, stage)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+    ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
+    state: dict = {"sk": None}
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        delta = kll_value_base(batch_df).groupBy("event_type", "_day").agg(
+            F.expr("kll_sketch_agg_bigint(_ve4, 400)").alias("_skb")
         )
-
-        state: dict = {"sk": None, "batches": 0}
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            delta = kll_value_base(batch_df).groupBy("event_type", "_day").agg(
-                F.expr("kll_sketch_agg_bigint(_ve4, 400)").alias("_skb")
-            )
-            if state["sk"] is None:
-                state["sk"] = delta.withColumnRenamed("_skb", "_sk").localCheckpoint()
-            else:
-                merged = (
-                    state["sk"]
-                    .join(delta, ["event_type", "_day"], "full_outer")
-                    .select(
-                        "event_type",
-                        "_day",
-                        F.expr(
-                            "CASE WHEN _sk IS NULL THEN _skb "
-                            "WHEN _skb IS NULL THEN _sk "
-                            "ELSE kll_sketch_merge_bigint(_sk, _skb) END"
-                        ).alias("_sk"),
-                    )
-                )
-                state["sk"] = merged.localCheckpoint()
-            state["batches"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(
-                "streaming_kll_value_maintenance: availableNow drain did not "
-                "terminate within 120s"
-            )
         if state["sk"] is None:
-            raise RuntimeError("streaming_kll_value_maintenance: no batches arrived")
-        global LAST_FOLD_BATCHES
-        LAST_FOLD_BATCHES = state["batches"]
-        out = kll_rollup_finalize(state["sk"], kll_value_base(ev))
-        # Materialize before the staged files are removed.
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            state["sk"] = delta.withColumnRenamed("_skb", "_sk").localCheckpoint()
+        else:
+            merged = (
+                state["sk"]
+                .join(delta, ["event_type", "_day"], "full_outer")
+                .select(
+                    "event_type",
+                    "_day",
+                    F.expr(
+                        "CASE WHEN _sk IS NULL THEN _skb "
+                        "WHEN _skb IS NULL THEN _sk "
+                        "ELSE kll_sketch_merge_bigint(_sk, _skb) END"
+                    ).alias("_sk"),
+                )
+            )
+            state["sk"] = merged.localCheckpoint()
+
+    # Two staged files -> two real availableNow micro-batches: the same
+    # (type, day) cell arrives in both batches (files are keyed by
+    # event_id, not day), so the pairwise-merge collision branch is
+    # genuinely exercised, not vacuous.
+    with ST.staged_stream(spark, ev, "event_id") as stream:
+        ST.fold_available_now(stream, fold)
+    return kll_rollup_finalize(state["sk"], kll_value_base(ev)).localCheckpoint()

@@ -49,10 +49,6 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def cocolated_join(spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner") -> DataFrame:
     """Join two tables bucketed on the SAME key with the SAME bucket count:
     Catalyst recognizes the matching output partitioning and plans the join

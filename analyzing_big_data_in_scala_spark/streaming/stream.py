@@ -7,11 +7,18 @@ collect-then-Kafka sink (:116-120). DStreams are gone in Spark 4, and the
 driver-side sink is the anti-pattern SURVEY.md §4.3.5 flags — so here:
 
 - source: file stream over the `events`/`documents` parquet (standing in
-  for the receiver), `trigger(processingTime="10 seconds")` for live runs
-  and `availableNow` for deterministic tests;
+  for the receiver), or a fixture staged as two range-partitioned files
+  (`staged_stream`) so a drain sees more than one micro-batch;
 - transform: sentiment as a pure column expression (per-batch, no
   per-record heavyweight init — fixing §4.3.4);
-- sink: `foreachBatch` (executor-side) or an in-memory table for tests.
+- sink: an exactly-once `foreachBatch` fold (`fold_available_now`,
+  executor-side) or an in-memory table (`run_available_now`).
+
+Every query is drained with the `availableNow` trigger, which processes
+what is present and stops, so results are batch-comparable. This module is
+the only place a stream is started or awaited. Both drains wait at most
+`DRAIN_TIMEOUT_S`; on timeout they stop the query, remove what they
+created and raise `RuntimeError` instead of returning a partial drain.
 
 Beyond-reference (flagged per SURVEY.md §2.10): event-time tumbling
 windows + watermark over `events.ts`.
@@ -19,12 +26,33 @@ windows + watermark over `events.ts`.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..operators.merge import idempotent_foreach_batch
+
+# Both drains wait this long for an availableNow query before stopping it
+# and raising.
+DRAIN_TIMEOUT_S = 120
+# A streaming query pins `spark.sql.shuffle.partitions` as its state-store
+# partition count at start, and every micro-batch pays a per-partition
+# state-store open/commit — so it tracks the stateful KEY cardinality, not
+# the batch engine's shuffle default (measured: a stream-stream join over
+# the fixtures runs 3.5x faster at 8 state partitions than at 32; a real
+# cluster with millions of keys would size it ≈ executors × cores).
+STATE_PARTITIONS = 8
+# Micro-batches that carried rows in the most recent drain (None while a
+# drain runs or after one failed). Tests assert >= 2 on staged sources:
+# a multi-batch property (fold merging, cross-batch state) is vacuous
+# when everything arrives in one batch.
+LAST_DRAIN_BATCHES: int | None = None
 
 # Tiny deterministic sentiment lexicon: the contract of the reference's
 # CoreNLP scorer (TwitterStreaming.scala:66-86) — 3 labels {NEGATIVE,
@@ -128,42 +156,102 @@ def session_window_counts(
     )
 
 
-def run_available_now(
-    result: DataFrame,
-    table_name: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drain the stream deterministically (T5-style sink, in-memory table):
-    `availableNow` processes everything present then stops — the test/
-    correctness harness's replacement for a live 10s trigger. Aggregations
-    drain in `complete` mode; joins and row-wise transforms in `append`.
+@contextlib.contextmanager
+def staged_stream(spark: SparkSession, frame: DataFrame, by: str):
+    """Stage `frame` as two parquet files range-partitioned on `by` and
+    yield a file stream over them that delivers one file per micro-batch;
+    the files are removed on exit.
 
-    `state_partitions` sizes the stateful operators' store: a streaming
-    query PINS `spark.sql.shuffle.partitions` at start time, and every
-    micro-batch pays a per-partition state-store open/commit — so it must
-    track the stateful KEY cardinality and executor count, not the batch
-    engine's shuffle default (measured here: a stream-stream join over the
-    fixtures runs 3.5x faster at 8 state partitions than at 32; a real
-    cluster with millions of keys would size it ≈ executors × cores). The
-    session conf is restored after the query starts."""
+    A single-file source is one availableNow batch, which would make any
+    incremental fold or cross-batch state vacuous. Two files is the
+    minimum multi-batch evidence (the drain's wall is the batch COUNT), so
+    it is ASSERTED here: if repartitionByRange's sampling ever produced an
+    empty partition, Spark would write one file and the multi-batch
+    property would collapse flakily downstream instead of loudly here."""
+    stage = tempfile.mkdtemp(prefix="stream_stage_")
+    try:
+        frame.repartitionByRange(2, by).write.mode("overwrite").parquet(stage)
+        reader = spark.read.parquet(stage)
+        n = len(reader.inputFiles())
+        if n < 2:
+            raise AssertionError(
+                f"staged stream fixture at {stage} has {n} file(s); the "
+                "multi-batch contract needs >= 2 — repartitionByRange "
+                "produced an empty partition"
+            )
+        yield (
+            spark.readStream.schema(reader.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+        )
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _await_drain(q) -> int:
+    """Wait for an availableNow query; stop it and raise on timeout. Sets
+    and returns LAST_DRAIN_BATCHES."""
+    global LAST_DRAIN_BATCHES
+    LAST_DRAIN_BATCHES = None
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise RuntimeError(
+            f"availableNow drain did not terminate within {DRAIN_TIMEOUT_S}s"
+        )
+    LAST_DRAIN_BATCHES = sum(1 for p in q.recentProgress if p.numInputRows > 0)
+    return LAST_DRAIN_BATCHES
+
+
+def fold_available_now(stream: DataFrame, fold) -> int:
+    """Drain `stream` into `fold(batch_df, batch_id)` through an
+    exactly-once foreachBatch: foreachBatch is at-least-once, and a crash
+    between a fold's side effect and the checkpoint commit redelivers the
+    same batch, which a += fold would double-count — the batch-id dedup
+    wrapper (merge.idempotent_foreach_batch) skips the replay. The
+    checkpoint lives in a temp dir removed afterwards. Returns the number
+    of micro-batches that carried rows."""
+    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
+    try:
+        q = (
+            stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        return _await_drain(q)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """Drain the stream into an in-memory table (T5-style sink) and return
+    it as a DataFrame. Aggregations drain in `complete` mode; joins and
+    row-wise transforms in `append`; running state in `update`.
+
+    The stateful operators' store is pinned to STATE_PARTITIONS (the
+    session conf is restored once the query has started). The sink's temp
+    view is dropped before returning: the returned frame is already bound
+    to the sink's data, so nothing stays registered in the session
+    catalog."""
     spark = result.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = (
             result.writeStream.outputMode(output_mode)
             .format("memory")
-            .queryName(table_name)
+            .queryName(name)
             .trigger(availableNow=True)
             .start()
         )
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination(120)
-    return result.sparkSession.table(table_name)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    try:
+        _await_drain(q)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def stream_stream_interval_join(
@@ -217,22 +305,6 @@ def stream_stream_interval_join(
     return l.join(r, cond, how).drop("_ss_right_key")
 
 
-def run_processing_time(
-    result: DataFrame, table_name: str, interval: str = "10 seconds"
-):
-    """T1: live micro-batch trigger matching the reference's 10s batch
-    interval (TwitterStreaming.scala:104). Returns the running
-    StreamingQuery — caller stops it. Tests use run_available_now instead
-    for determinism."""
-    return (
-        result.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(table_name)
-        .trigger(processingTime=interval)
-        .start()
-    )
-
-
 def sentiment_stream(stream: DataFrame, text_col: str = "event_type") -> DataFrame:
     """T2/T3: project text, attach sentiment label (stateless transform)."""
     return stream.select(
@@ -248,8 +320,7 @@ def foreach_batch_collector(result: DataFrame, sink: list) -> None:
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         sink.append((batch_id, batch_df.count()))
 
-    q = result.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination(120)
+    fold_available_now(result, handle)
 
 
 def to_kafka_frame(
@@ -315,5 +386,4 @@ def kafka_sink_via_foreach_batch(result: DataFrame, topic: str, records: list, k
         for row in batch_df.collect():
             records.append((row.topic, row.key, row.value))
 
-    q = frame.writeStream.outputMode("append").foreachBatch(produce).trigger(availableNow=True).start()
-    q.awaitTermination(120)
+    fold_available_now(frame, produce)

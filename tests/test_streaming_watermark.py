@@ -89,8 +89,6 @@ def test_watermark_drops_late_event(spark, tmp_path):
 def test_drop_duplicates_within_watermark_across_batches(spark, tmp_path):
     """Cross-batch dedup state: a key seen in batch 1 suppresses its batch-2
     duplicate (within the watermark delay), while a fresh key passes."""
-    import uuid
-
     from analyzing_big_data_in_scala_spark.streaming.stream import run_available_now
 
     tmpdir = str(tmp_path)
@@ -116,8 +114,7 @@ def test_drop_duplicates_within_watermark_across_batches(spark, tmp_path):
         .parquet(os.path.join(tmpdir, "stream"))
     )
     dedup = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["k"])
-    table = f"t_dedup_wm_{uuid.uuid4().hex[:8]}"
-    mat = run_available_now(dedup, table, output_mode="append", state_partitions=4)
+    mat = run_available_now(dedup, output_mode="append")
     kept = sorted(r.k for r in mat.select("k").collect())
     assert kept == ["a", "b", "c"]  # one survivor per key, across batches
 
@@ -184,11 +181,11 @@ def test_streaming_incremental_rollup_folds_multiple_batches(spark):
     # time buckets, so buckets straddle file splits). The query surfaces
     # its micro-batch count precisely so this isn't vacuously green when
     # everything arrives in one batch.
-    from analyzing_big_data_in_scala_spark.plans import streaming_queries as SQ
+    from analyzing_big_data_in_scala_spark.streaming import stream as ST
 
     assert len(got) > 0
-    assert SQ.LAST_FOLD_BATCHES is not None and SQ.LAST_FOLD_BATCHES >= 2, (
-        f"expected >= 2 micro-batches, got {SQ.LAST_FOLD_BATCHES}"
+    assert ST.LAST_DRAIN_BATCHES is not None and ST.LAST_DRAIN_BATCHES >= 2, (
+        f"expected >= 2 micro-batches, got {ST.LAST_DRAIN_BATCHES}"
     )
 
 
@@ -197,8 +194,7 @@ def test_streaming_session_windows_match_batch_across_batches(spark):
     staged multi-file source actually delivered multiple micro-batches (so the
     state store really extended/merged open sessions across batches)."""
     from analyzing_big_data_in_scala_spark.plans import QUERIES
-    from analyzing_big_data_in_scala_spark.plans import pipeline_queries as PQ
-    from analyzing_big_data_in_scala_spark.plans import streaming_queries as SQ
+    from analyzing_big_data_in_scala_spark.streaming import stream as ST
 
     sf = "/root/testdata/sf0.001"
     out = QUERIES["streaming_session_windows"].fn(spark, sf)
@@ -206,8 +202,8 @@ def test_streaming_session_windows_match_batch_across_batches(spark):
     got = {(r.user_id, r.session_start): (r.n_events, r.sum_value) for r in out.collect()}
     want = {(r.user_id, r.session_start): (r.n_events, r.sum_value) for r in batch.collect()}
     assert got == want and len(got) > 0
-    assert SQ.LAST_SESSION_BATCHES is not None and SQ.LAST_SESSION_BATCHES >= 2, (
-        f"expected >= 2 micro-batches, got {SQ.LAST_SESSION_BATCHES}"
+    assert ST.LAST_DRAIN_BATCHES is not None and ST.LAST_DRAIN_BATCHES >= 2, (
+        f"expected >= 2 micro-batches, got {ST.LAST_DRAIN_BATCHES}"
     )
 
 
@@ -242,13 +238,13 @@ def test_streaming_hll_sketch_maintenance_incremental_and_accurate(spark):
     including cross-BATCH user dedup (the same user arrives in several
     micro-batches; sketch union must count them once, which the exact
     judge columns verify)."""
-    import analyzing_big_data_in_scala_spark.plans.streaming_queries as SQ
     from analyzing_big_data_in_scala_spark.plans.registry import QUERIES
+    from analyzing_big_data_in_scala_spark.streaming import stream as ST
 
     from .conftest import SF_SMALL
 
     rows = QUERIES["streaming_hll_sketch_maintenance"].fn(spark, SF_SMALL).collect()
-    assert SQ.LAST_FOLD_BATCHES is not None and SQ.LAST_FOLD_BATCHES >= 2
+    assert ST.LAST_DRAIN_BATCHES is not None and ST.LAST_DRAIN_BATCHES >= 2
     assert rows and all(r.hll_stream_ok == 1 for r in rows)
     assert all(r.n_days >= 1 and r.exact_users >= 1 for r in rows)
 
@@ -257,8 +253,8 @@ def test_streaming_cms_fold_value_identical_to_batch(spark):
     """The drained per-batch CMS fold must reproduce the one-shot batch
     sketch BIT-FOR-BIT (integer cell addition is order-independent), and
     it must have run over >= 2 real micro-batches."""
-    import analyzing_big_data_in_scala_spark.plans.streaming_queries as SQ
     from analyzing_big_data_in_scala_spark.plans.registry import QUERIES
+    from analyzing_big_data_in_scala_spark.streaming import stream as ST
 
     from .conftest import SF_SMALL
 
@@ -266,10 +262,52 @@ def test_streaming_cms_fold_value_identical_to_batch(spark):
         r.term: (r.exact_cnt, r.cms_est, r.overcount)
         for r in QUERIES["streaming_cms_heavy_hitters"].fn(spark, SF_SMALL).collect()
     }
-    assert SQ.LAST_FOLD_BATCHES is not None and SQ.LAST_FOLD_BATCHES >= 2
+    assert ST.LAST_DRAIN_BATCHES is not None and ST.LAST_DRAIN_BATCHES >= 2
     batch = {
         r.term: (r.exact_cnt, r.cms_est, r.overcount)
         for r in QUERIES["terms_cms_heavy_hitters"].fn(spark, SF_SMALL).collect()
     }
     assert streamed == batch
     assert all(over >= 0 for (_, _, over) in streamed.values())
+
+
+def test_drains_leave_no_tables_behind(spark):
+    """Every drain removes what it registered: three calls each of two
+    memory-sink queries and the staged stateful query leave the session
+    catalog exactly as they found it."""
+    from analyzing_big_data_in_scala_spark.plans import QUERIES
+
+    from .conftest import SF_SMALL
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    for name in (
+        "streaming_sentiment_counts",
+        "streaming_user_totals",
+        "streaming_tumbling_counts",
+    ):
+        for _ in range(3):
+            assert QUERIES[name].fn(spark, SF_SMALL).count() > 0
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
+def test_drain_timeout_raises_and_cleans_up(spark, monkeypatch):
+    """A drain that outlives DRAIN_TIMEOUT_S raises instead of returning a
+    partial result, and leaves neither a running query nor a sink view."""
+    import pytest
+
+    from analyzing_big_data_in_scala_spark.sources.catalog import load_events
+    from analyzing_big_data_in_scala_spark.streaming import stream as ST
+
+    from .conftest import SF_SMALL
+
+    monkeypatch.setattr(ST, "DRAIN_TIMEOUT_S", 0.1)
+    before = sorted(t.name for t in spark.catalog.listTables())
+    ev = load_events(spark, SF_SMALL).select("event_id", "event_type")
+    with ST.staged_stream(spark, ev, "event_id") as stream:
+        with pytest.raises(RuntimeError, match="did not terminate"):
+            ST.fold_available_now(stream, lambda df, batch_id: df.count())
+        with pytest.raises(RuntimeError, match="did not terminate"):
+            ST.run_available_now(stream.groupBy("event_type").count())
+    assert spark.streams.active == []
+    assert ST.LAST_DRAIN_BATCHES is None
+    assert sorted(t.name for t in spark.catalog.listTables()) == before

@@ -212,7 +212,7 @@ def test_stream_batch_equivalence(spark):
 
     sf = "/root/testdata/sf0.001"
     streamed = ST.run_available_now(
-        ST.windowed_counts(ST.events_stream(spark, sf)), "t_stream_eq"
+        ST.windowed_counts(ST.events_stream(spark, sf))
     ).collect()
     ev = load_events(spark, sf)
     batch = (

@@ -9,11 +9,11 @@ Components (the query's exact stages, same code paths):
   offline_build   — PQ.build_ivfpq_index(sample vec_id<400): geometry
                     train + 3 persisted saveAsTable writes (job-count
                     bound, not data bound)
-  staging_write   — repartitionByRange(2) parquet write of the stream's
-                    source files
-  drain           — the availableNow foreachBatch drain itself (2
-                    micro-batches, localCheckpoint + encode + bucketed
-                    append per batch)
+  staging_write   — streaming.stream.staged_stream: repartitionByRange(2)
+                    parquet write of the stream's source files
+  drain           — streaming.stream.fold_available_now, the availableNow
+                    foreachBatch drain itself (2 micro-batches,
+                    localCheckpoint + encode + bucketed append per batch)
   agreement       — indexed ADC search + on-the-fly twin with inline
                     full-corpus re-encode + the left-semi compare
 
@@ -24,9 +24,7 @@ decomposition` section in SCALING.md.
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -34,11 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from analyzing_big_data_in_scala_spark.operators import pq as PQ  # noqa: E402
-from analyzing_big_data_in_scala_spark.operators.merge import (  # noqa: E402
-    idempotent_foreach_batch,
-)
 from analyzing_big_data_in_scala_spark.session import get_spark  # noqa: E402
 from analyzing_big_data_in_scala_spark.sources.catalog import load_table  # noqa: E402
+from analyzing_big_data_in_scala_spark.streaming import stream as ST  # noqa: E402
 
 
 def main() -> None:
@@ -68,73 +64,53 @@ def main() -> None:
         PQ.build_ivfpq_index(sample, prefix=prefix)
         t["offline_build"] = time.perf_counter() - t0
 
-        stage = tempfile.mkdtemp(prefix="ingest_probe_")
-        ckpt = tempfile.mkdtemp(prefix="ingest_probe_ckpt_")
-        try:
-            t0 = time.perf_counter()
-            rest.select("vec_id", "embedding").repartitionByRange(
-                2, "vec_id"
-            ).write.mode("overwrite").parquet(stage)
+        def fold(batch_df: DataFrame, batch_id: int) -> None:
+            batch = batch_df.localCheckpoint()
+            if not batch.take(1):
+                return
+            PQ.ivfpq_index_append(batch, prefix=prefix)
+
+        t0 = time.perf_counter()
+        with ST.staged_stream(
+            spark, rest.select("vec_id", "embedding"), "vec_id"
+        ) as stream:
             t["staging_write"] = time.perf_counter() - t0
-
-            schema = spark.read.parquet(stage).schema
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-            )
-
-            def fold(batch_df: DataFrame, batch_id: int) -> None:
-                batch = batch_df.localCheckpoint()
-                if not batch.take(1):
-                    return
-                PQ.ivfpq_index_append(batch, prefix=prefix)
-
             t0 = time.perf_counter()
-            q = (
-                stream.writeStream.foreachBatch(idempotent_foreach_batch(fold))
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            assert q.awaitTermination(120)
+            ST.fold_available_now(stream, fold)
             t["drain"] = time.perf_counter() - t0
 
-            for tab in ("codes", "centroids", "codebook"):
-                spark.catalog.refreshTable(f"{prefix}_{tab}")
-            probes = emb.filter(F.col("vec_id") < 3)
-            t0 = time.perf_counter()
-            indexed = PQ.ivfpq_topk_indexed(
-                spark, emb, probes, prefix=prefix, k=10, nprobe=4
-            ).localCheckpoint(eager=False)
-            cents = spark.table(f"{prefix}_centroids")
-            cb = spark.table(f"{prefix}_codebook")
-            from analyzing_big_data_in_scala_spark.operators.similarity import (
-                spherical_assign,
-            )
+        for tab in ("codes", "centroids", "codebook"):
+            spark.catalog.refreshTable(f"{prefix}_{tab}")
+        probes = emb.filter(F.col("vec_id") < 3)
+        t0 = time.perf_counter()
+        indexed = PQ.ivfpq_topk_indexed(
+            spark, emb, probes, prefix=prefix, k=10, nprobe=4
+        ).localCheckpoint(eager=False)
+        cents = spark.table(f"{prefix}_centroids")
+        cb = spark.table(f"{prefix}_codebook")
+        from analyzing_big_data_in_scala_spark.operators.similarity import (
+            spherical_assign,
+        )
 
-            cells = spherical_assign(emb, cents).select(
-                "vec_id", F.col("centroid_id").alias("cell")
-            )
-            live_codes = PQ.pq_encode(emb, cb, m=16).join(cells, "vec_id")
-            live = PQ.ivfpq_topk(
-                emb, probes, k=10, nprobe=4,
-                index={"centroids": cents, "codebook": cb, "codes": live_codes},
-            )
-            both = indexed.join(
-                live, ["query_id", "vec_id", "cosine", "rank"], "left_semi"
-            )
-            n_idx = indexed.groupBy("query_id").agg(
-                F.count("*").alias("n_indexed")
-            )
-            n_agr = both.groupBy("query_id").agg(F.count("*").alias("n_agree"))
-            n_idx.join(n_agr, "query_id", "left").write.mode(
-                "overwrite"
-            ).format("noop").save()
-            t["agreement"] = time.perf_counter() - t0
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
+        cells = spherical_assign(emb, cents).select(
+            "vec_id", F.col("centroid_id").alias("cell")
+        )
+        live_codes = PQ.pq_encode(emb, cb, m=16).join(cells, "vec_id")
+        live = PQ.ivfpq_topk(
+            emb, probes, k=10, nprobe=4,
+            index={"centroids": cents, "codebook": cb, "codes": live_codes},
+        )
+        both = indexed.join(
+            live, ["query_id", "vec_id", "cosine", "rank"], "left_semi"
+        )
+        n_idx = indexed.groupBy("query_id").agg(
+            F.count("*").alias("n_indexed")
+        )
+        n_agr = both.groupBy("query_id").agg(F.count("*").alias("n_agree"))
+        n_idx.join(n_agr, "query_id", "left").write.mode(
+            "overwrite"
+        ).format("noop").save()
+        t["agreement"] = time.perf_counter() - t0
         t["total"] = sum(t.values())
         rounds.append({k: round(v, 2) for k, v in t.items()})
         print(rounds[-1], flush=True)
