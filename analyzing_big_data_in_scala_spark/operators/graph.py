@@ -893,12 +893,13 @@ def adamic_adar_topk(
     ).limit(k)
 
 
-# Scoring projections over a _wedge_candidate_pairs scaffold, shared
-# VERBATIM by the registry operators above/below and bench.py's
-# shared-scaffold thunks (r15, ADVICE r14: the bench previously
-# duplicated these expressions — a formula change there would have
-# silently timed a stale score). The AA scaffold carries weight_sum; the
-# jaccard/PA scaffolds need with_endpoint_degrees=True.
+# Scoring projections over a _wedge_candidate_pairs scaffold, shared by
+# adamic_adar_topk and the link-prediction queries that finalize over the
+# plans' `graph_wedge_scaffold` shared input. AA reads weight_sum;
+# Jaccard/PA need with_endpoint_degrees=True. Each returns
+# (u, v, common_neighbors, <score>) for u < v, pure BIGINT except AA's one
+# quantized ln site; the three rankings disagree exactly on hub-adjacent
+# candidates, which is why all three ship.
 
 
 def aa_scoring(scaffold: DataFrame) -> DataFrame:
@@ -908,6 +909,9 @@ def aa_scoring(scaffold: DataFrame) -> DataFrame:
 
 
 def jaccard_scoring(scaffold: DataFrame) -> DataFrame:
+    """|N(u)∩N(v)| / |N(u)∪N(v)| = common / (deg(u)+deg(v)−common), as
+    round-half-up ppm — the normalized sibling of AA that penalizes hub
+    endpoints."""
     return scaffold.select(
         "u",
         "v",
@@ -920,69 +924,12 @@ def jaccard_scoring(scaffold: DataFrame) -> DataFrame:
 
 
 def pa_scoring(scaffold: DataFrame) -> DataFrame:
+    """deg(u)·deg(v): preferential attachment bets ON hubs. Candidates are
+    the scaffold's 2-hop pairs — true PA over all non-adjacent pairs is
+    |V|²-quadratic by definition, a deliberate choice and not a default."""
     return scaffold.select(
         "u",
         "v",
         "common_neighbors",
         (F.col("_du") * F.col("_dv")).cast("long").alias("pa_score"),
     )
-
-
-def jaccard_link_topk(
-    edges: DataFrame, k: int | None = 20, max_center_degree: int | None = None
-) -> DataFrame:
-    """Jaccard-coefficient link prediction (r12) — the NORMALIZED sibling
-    of :func:`adamic_adar_topk`: for every non-adjacent pair (u, v),
-    score = |N(u)∩N(v)| / |N(u)∪N(v)| = common / (deg(u)+deg(v)−common).
-    Where Adamic–Adar weights rare common neighbors up, Jaccard penalizes
-    hub endpoints — the two standard rankings disagree exactly on
-    hub-adjacent candidates, which is why both ship. Returns the top-k
-
-        (u, v, common_neighbors, jaccard_ppm)   with u < v
-
-    deterministically (score DESC, then u, v). PURE BIGINT end to end:
-    counts and degrees are integers and the only division is the final
-    round-half-up ppm — no float anywhere (unlike AA's one quantized ln
-    site), so the score is trivially bit-identical cross-engine.
-
-    Scale shape: identical to adamic_adar_topk (one adjacency
-    self-equi-join for wedges, aggregate-first then LEFT ANTI against
-    the canonical edges, two degree hash joins on the candidate-pair
-    table — candidate volume, never wedge volume); `max_center_degree`
-    is the same hub-cost dial, with the same semantics caveat: capped
-    centers' wedges are skipped, so `common` undercounts through hubs.
-    Scaffold is the shared :func:`_wedge_candidate_pairs`
-    (unweighted, with endpoint degrees); only the scoring expression and
-    top-k live here."""
-    scored = jaccard_scoring(
-        _wedge_candidate_pairs(edges, max_center_degree, with_endpoint_degrees=True)
-    )
-    if k is None:
-        return scored
-    return scored.orderBy(F.desc("jaccard_ppm"), F.asc("u"), F.asc("v")).limit(k)
-
-
-def preferential_attachment_topk(
-    edges: DataFrame, k: int | None = 20, max_center_degree: int | None = None
-) -> DataFrame:
-    """Preferential-attachment link prediction (r12) — the third member
-    of the classic trio (Adamic–Adar weights rare common neighbors,
-    Jaccard penalizes hubs, PA BETS ON hubs: score = deg(u)·deg(v)).
-    Candidates are the standard 2-hop restriction (non-adjacent pairs
-    with >= 1 common neighbor — true PA over ALL non-adjacent pairs is
-    |V|²-quadratic by definition and is a deliberate analysis choice,
-    not a default; the 2-hop set is where link formation is actually
-    plausible and keeps the operator wedge-bounded). Returns the top-k
-
-        (u, v, common_neighbors, pa_score)   with u < v
-
-    deterministically (score DESC, then u, v). PURE BIGINT: degrees and
-    the product — no division, no float. Scaffold is the shared
-    :func:`_wedge_candidate_pairs` (unweighted, with endpoint degrees);
-    only the deg(u)*deg(v) scoring expression and top-k live here."""
-    scored = pa_scoring(
-        _wedge_candidate_pairs(edges, max_center_degree, with_endpoint_degrees=True)
-    )
-    if k is None:
-        return scored
-    return scored.orderBy(F.desc("pa_score"), F.asc("u"), F.asc("v")).limit(k)

@@ -453,34 +453,6 @@ def _append_bucketed(df: DataFrame, table: str, bucket_col: str) -> None:
     )
 
 
-def hyperplane_bucket(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
-    """Random-hyperplane LSH bucket id expression: bit p = sign(v . h_p)
-    with h_p a deterministic +-1 hyperplane derived from (p, index) parity.
-
-    NOTE: the (i*(p+1)+p) % 3 sign pattern depends only on p mod 3, so the
-    family has just THREE distinct hyperplanes (and the p%3==2 plane never
-    flips a sign) — cheap to re-derive in a SQL oracle, which is why
-    :func:`semantic_dedup` keeps it (its cells only need to agree across
-    engines, recall is enforced by the verify step). It is NOT a good ANN
-    hash; :func:`lsh_topk` uses :func:`_lsh_signatures` instead."""
-    v = F.transform(vec, lambda x: x.cast("double"))
-    bucket = None
-    for p in range(n_planes):
-        # Deterministic ±1 pattern per plane: sign flips where (i*(p+1)+p) % 3 == 0.
-        proj = F.aggregate(
-            F.zip_with(
-                v,
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda x, i: F.when(((i * (p + 1) + p) % 3) == 0, -x).otherwise(x),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("int")
-
-
 @lru_cache(maxsize=None)
 def _plane_signs(g: int, dim: int) -> tuple[float, ...]:
     """Deterministic pseudo-random ±1 sign vector for global plane g:
@@ -505,8 +477,8 @@ def _lsh_signatures(
     """All `n_tables` LSH bucket ids per vector in ONE Arrow matmul pass:
     the (dim x n_tables*n_planes) ±1 sign matrix (columns from
     :func:`_plane_signs` — md5-parity signs, effectively independent across
-    planes and tables, unlike :func:`hyperplane_bucket`'s 3-plane parity
-    family whose near-duplicate planes capped recall at 2-3/10) multiplies
+    planes and tables, unlike :func:`_quantize_bucket_tag`'s 3-plane
+    parity family whose near-duplicate planes capped recall at 2-3/10) multiplies
     each Arrow batch once; bit p of table t is sign(proj[:, t*n_planes+p]).
     Returns (out_id, tbl, bucket) — n_tables rows per input vector.
 
@@ -845,7 +817,13 @@ def _quantize_bucket_tag(
     ((i*(p+1)+p) % 3 == 0 → -1). Returns (id, qvec, bucket). Every
     downstream cosine over the qvecs sums INTEGER-valued doubles — exact
     in any order, so both the cell id and any threshold decision
-    bit-match a SQL re-derivation."""
+    bit-match a SQL re-derivation.
+
+    The sign pattern depends only on p mod 3, so the family has just
+    THREE distinct hyperplanes (and the p%3==2 plane never flips a
+    sign): cheap to re-derive in a SQL oracle, which is all the semantic
+    family needs (recall is enforced by its verify step), but NOT a good
+    ANN hash — :func:`lsh_topk` uses :func:`_lsh_signatures` instead."""
 
     def tag(batches):
         # Self-contained closure: executors import locally.
@@ -968,8 +946,9 @@ def semantic_dedup(
     This implementation is deterministic end to end so it can be
     value-checked cross-engine, where the paper's k-means can't:
 
-    - the "cluster" is the :func:`hyperplane_bucket` LSH cell (2^n_planes
-      cells) — a pure expression, no fitted model, no seed drift;
+    - the "cluster" is the parity-hyperplane LSH cell of
+      :func:`_quantize_bucket_tag` (2^n_planes cells) — a fixed formula,
+      no fitted model, no seed drift;
     - vectors are :func:`quantize_int8` first, so every projection and
       every within-cell cosine sums INTEGER-valued doubles — exact, no
       float associativity noise in either the bucket sign or the
@@ -984,11 +963,11 @@ def semantic_dedup(
 
     Both stages are Arrow/numpy, ONE shuffle total (on the cell key):
 
-    1. `mapInPandas` quantize+bucket — the same formulas as
-       :func:`quantize_int8` / :func:`hyperplane_bucket` (floor(x/s+0.5);
-       ±1 plane where (i*(p+1)+p) % 3 == 0), but one (N×dim)@(dim×planes)
-       matmul per Arrow batch instead of n_planes expression-tree passes
-       per row — the expression form measured 25x wall-time at a 16x
+    1. `mapInPandas` quantize+bucket (:func:`_quantize_bucket_tag`):
+       :func:`quantize_int8`'s floor(x/s+0.5) and a ±1 plane where
+       (i*(p+1)+p) % 3 == 0, as one (N×dim)@(dim×planes) matmul per
+       Arrow batch instead of n_planes expression-tree passes per row —
+       the expression form measured 25x wall-time at a 16x
        probe because per-row plane cost grows with n_planes; this form
        stays ~linear.
     2. `applyInPandas` per cell emits (id, bucket, kept) DIRECTLY — the

@@ -1,4 +1,4 @@
-from .registry import QUERIES, QuerySpec, oracle_sql_map, query, query_map  # noqa: F401
+from .registry import QUERIES, SHARED, QuerySpec, oracle_sql_map, query, query_map, shared  # noqa: F401
 
 # Importing the query modules populates the registry.
 from . import relational_queries  # noqa: F401,E402

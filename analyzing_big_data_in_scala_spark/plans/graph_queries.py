@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..operators import graph as G
 from ..operators.sequence import CORR_PPM_SQL as _CORR_PPM
 from ..sources.catalog import load_table
-from .registry import query
+from .registry import query, shared
 
 # DuckDB twin of operators.graph.edges_from_events.
 _SQL_EDGES = """
@@ -42,88 +42,24 @@ canon AS (
 """
 
 
+# Shared inputs (registry `shared`): the events edge list, and the
+# link-prediction trio's 2-hop candidate scaffold. Queries that declare
+# `uses=` finalize over them, so bench.py builds each once for all of
+# its consumers; other graph queries derive `_edges` inline.
+@shared("graph_edges")
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return G.edges_from_events(load_table(spark, sf_dir, "events"))
 
 
-# ---------------------------------------------------------------------------
-# r15: every graph query body is split into a `<name>_frame(edges)` helper
-# consumed by BOTH the registry fn (self-contained for the driver: edges
-# re-derived per query) and bench.py's shared-edges family (ONE
-# materialized edges_from_events pass, priced as graph_edges_build — the
-# r14 wedge-scaffold / langid precedent). Keeping the composition in one
-# place means the bench can never silently time a stale formula (ADVICE
-# r14 item on the jaccard/PA scoring duplication).
-# ---------------------------------------------------------------------------
-
-
-def out_degrees_frame(edges: DataFrame) -> DataFrame:
-    return (
-        G.out_degrees(edges)
-        .orderBy(F.desc("out_degree"), F.asc("id"))
-        .limit(20)
+@shared("graph_wedge_scaffold", uses=("graph_edges",))
+def _wedge_scaffold(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    """The superset scaffold of AA, Jaccard and PA: AA's per-center ppm
+    weights and both endpoint degrees on every candidate pair."""
+    return G._wedge_candidate_pairs(
+        graph_edges,
+        center_weight_sql=G.AA_CONTRIB_PPM_SQL,
+        with_endpoint_degrees=True,
     )
-
-
-def triangle_counts_frame(edges: DataFrame) -> DataFrame:
-    return (
-        G.triangle_counts(edges)
-        .orderBy(F.desc("triangles"), F.asc("id"))
-        .limit(20)
-    )
-
-
-def pagerank_frame(edges: DataFrame) -> DataFrame:
-    pr = G.pagerank(edges, alpha=0.15, max_iterations=10)
-    return pr.select("id", F.round("pagerank", 6).alias("pagerank")).orderBy(
-        F.desc("pagerank"), F.asc("id")
-    ).limit(20)
-
-
-def bfs_hops_frame(edges: DataFrame) -> DataFrame:
-    hops = G.bfs_hops(edges, max_iterations=30)
-    return hops.select("id", F.col("hops").cast("int").alias("hops"))
-
-
-def sssp_weighted_frame(edges: DataFrame) -> DataFrame:
-    dist = G.sssp_weighted(edges, max_hops=15)
-    return dist.select("id", F.col("dist").cast("long").alias("dist"))
-
-
-def kcore_membership_frame(edges: DataFrame) -> DataFrame:
-    return G.kcore_vertices(edges, k=70)
-
-
-def label_propagation_frame(edges: DataFrame) -> DataFrame:
-    return G.label_propagation(edges, rounds=4)
-
-
-def trustrank_frame(edges: DataFrame) -> DataFrame:
-    verts = G._vertices_from_edges(edges)
-    seeds = verts.filter(F.col("id") % 20 == 0)
-    ppr = G.personalized_pagerank(edges, seeds, alpha=0.15, iterations=10)
-    return (
-        ppr.select("id", F.round("ppr", 6).alias("ppr"))
-        .orderBy(F.desc("ppr"), F.asc("id"))
-        .limit(20)
-    )
-
-
-def hits_authorities_frame(edges: DataFrame) -> DataFrame:
-    res = G.hits(edges, iterations=8)
-    return (
-        res.select(
-            "id",
-            F.round("auth", 6).alias("auth"),
-            F.round("hub", 6).alias("hub"),
-        )
-        .orderBy(F.desc("auth"), F.asc("id"))
-        .limit(20)
-    )
-
-
-def adamic_adar_capped_frame(edges: DataFrame) -> DataFrame:
-    return G.adamic_adar_topk(edges, k=20, max_center_degree=95)
 
 
 def _pagerank_sql(iterations: int = 10, reference: bool = False) -> str:
@@ -208,6 +144,7 @@ _CC_SIZES_SQL = f"""
 
 @query(
     "graph_out_degrees",
+    uses=("graph_edges",),
     oracle=f"""
         WITH {_SQL_EDGES}
         SELECT src AS id, COUNT(*) AS out_degree FROM edges GROUP BY src
@@ -216,8 +153,12 @@ _CC_SIZES_SQL = f"""
     """,
     description="G2 outDegrees top-20 (EpinionsGraphFrameAnalysis.scala:64-75)",
 )
-def graph_out_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return out_degrees_frame(_edges(spark, sf_dir))
+def graph_out_degrees(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    return (
+        G.out_degrees(graph_edges)
+        .orderBy(F.desc("out_degree"), F.asc("id"))
+        .limit(20)
+    )
 
 
 @query(
@@ -240,6 +181,7 @@ def graph_in_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_triangle_counts",
+    uses=("graph_edges",),
     oracle=f"""
         WITH {_SQL_CANON},
         tri AS (
@@ -259,17 +201,25 @@ def graph_in_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="G6 triangleCount top-20 (EpinionsGraphFrameAnalysis.scala:119-131)",
 )
-def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return triangle_counts_frame(_edges(spark, sf_dir))
+def graph_triangle_counts(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    return (
+        G.triangle_counts(graph_edges)
+        .orderBy(F.desc("triangles"), F.asc("id"))
+        .limit(20)
+    )
 
 
 @query(
     "graph_pagerank",
+    uses=("graph_edges",),
     oracle=_pagerank_sql(iterations=10, reference=False),
     description="G4 PageRank (damping 0.15, 10 iters) top-20 (EpinionsGraphFrameAnalysis.scala:91-103); oracle = the fixpoint UNROLLED into 10 generated CTE stages, value-checked",
 )
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pagerank_frame(_edges(spark, sf_dir))
+def graph_pagerank(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    pr = G.pagerank(graph_edges, alpha=0.15, max_iterations=10)
+    return pr.select("id", F.round("pagerank", 6).alias("pagerank")).orderBy(
+        F.desc("pagerank"), F.asc("id")
+    ).limit(20)
 
 
 @query(
@@ -334,6 +284,7 @@ def graph_components_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_bfs_hops",
+    uses=("graph_edges",),
     # Iterative != unverifiable: BFS layers are exactly the recursive-CTE
     # closure with MIN(depth) labels, depth-capped to the operator's
     # iteration cap so both sides terminate identically.
@@ -354,8 +305,9 @@ def graph_components_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="Unweighted shortest hops (BFS frontier expansion, Pregel shape) from the min-id vertex; oracle = depth-capped recursive-CTE closure with MIN(depth) labels",
 )
-def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bfs_hops_frame(_edges(spark, sf_dir))
+def graph_bfs_hops(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    hops = G.bfs_hops(graph_edges, max_iterations=30)
+    return hops.select("id", F.col("hops").cast("int").alias("hops"))
 
 
 _HASH64 = "CAST(concat('0x', substr(md5(CAST({x} AS VARCHAR)), 1, 15)) AS BIGINT)"
@@ -363,6 +315,7 @@ _HASH64 = "CAST(concat('0x', substr(md5(CAST({x} AS VARCHAR)), 1, 15)) AS BIGINT
 
 @query(
     "graph_sssp_weighted",
+    uses=("graph_edges",),
     # Weighted companion of graph_bfs_hops: deterministic per-edge weights
     # (1 + portable-hash % 9) re-derived identically in DuckDB; both sides
     # compute "min distance over paths of <= 15 edges" (the Spark operator
@@ -389,8 +342,9 @@ _HASH64 = "CAST(concat('0x', substr(md5(CAST({x} AS VARCHAR)), 1, 15)) AS BIGINT
     """,
     description="Weighted SSSP (frontier-pruned Bellman-Ford, <=15-edge paths) from the min-id vertex; deterministic hash-derived weights; oracle = depth-capped recursive CTE with MIN(total weight)",
 )
-def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sssp_weighted_frame(_edges(spark, sf_dir))
+def graph_sssp_weighted(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    dist = G.sssp_weighted(graph_edges, max_hops=15)
+    return dist.select("id", F.col("dist").cast("long").alias("dist"))
 
 
 def _kcore_sql(k: int = 3, stages: int = 30) -> str:
@@ -426,6 +380,7 @@ def _kcore_sql(k: int = 3, stages: int = 30) -> str:
 
 @query(
     "graph_kcore_membership",
+    uses=("graph_edges",),
     # k=70 sits just above the fixture graph's minimum degree at the
     # driver's oracle scale (sf0.01: min deg 68, median 86), so the peel
     # actually fires (cascading removals) instead of trivially keeping or
@@ -433,8 +388,8 @@ def _kcore_sql(k: int = 3, stages: int = 30) -> str:
     oracle=_kcore_sql(k=70, stages=30),
     description="k-core decomposition (k=70) by iterative peeling: surviving vertices with their within-core degree — the dense-region primitive; per round one degree aggregate + two semi joins over the shrinking edge set, early-exit on the first stable round (operators/graph.py kcore_vertices; oracle = 30 unrolled peel stages matching the loop cap, exact fixpoint)",
 )
-def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return kcore_membership_frame(_edges(spark, sf_dir))
+def graph_kcore_membership(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    return G.kcore_vertices(graph_edges, k=70)
 
 
 def _lpa_sql(rounds: int = 4) -> str:
@@ -476,11 +431,12 @@ def _lpa_sql(rounds: int = 4) -> str:
 
 @query(
     "graph_label_propagation",
+    uses=("graph_edges",),
     oracle=_lpa_sql(rounds=4),
     description="Synchronous label-propagation community detection, 4 fixed rounds (GraphFrames labelPropagation counterpart): per round one edges-x-labels equi-join + per-vertex (count desc, label asc) argmax via min_by — deterministic, value-checked against a 4-round unrolled MATERIALIZED-CTE oracle (operators/graph.py)",
 )
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return label_propagation_frame(_edges(spark, sf_dir))
+def graph_label_propagation(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    return G.label_propagation(graph_edges, rounds=4)
 
 
 def _ppr_sql(iterations: int = 10, seed_mod: int = 20, alpha: float = 0.15) -> str:
@@ -525,11 +481,18 @@ def _ppr_sql(iterations: int = 10, seed_mod: int = 20, alpha: float = 0.15) -> s
 
 @query(
     "graph_trustrank_from_seeds",
+    uses=("graph_edges",),
     oracle=_ppr_sql(iterations=10, seed_mod=20),
     description="Personalized PageRank / TrustRank (Gyongyi et al. 2004): teleport uniform over a deterministic seed set (id %% 20 == 0), 10 unrolled iterations — trust propagation from hand-audited sources, the graph-side quality signal of a curation pipeline; fully value-checked (operators/graph.py personalized_pagerank)",
 )
-def graph_trustrank_from_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return trustrank_frame(_edges(spark, sf_dir))
+def graph_trustrank_from_seeds(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    seeds = G._vertices_from_edges(graph_edges).filter(F.col("id") % 20 == 0)
+    ppr = G.personalized_pagerank(graph_edges, seeds, alpha=0.15, iterations=10)
+    return (
+        ppr.select("id", F.round("ppr", 6).alias("ppr"))
+        .orderBy(F.desc("ppr"), F.asc("id"))
+        .limit(20)
+    )
 
 
 def _hits_sql(iterations: int = 8) -> str:
@@ -581,15 +544,26 @@ def _hits_sql(iterations: int = 8) -> str:
 
 @query(
     "graph_hits_authorities",
+    uses=("graph_edges",),
     oracle=_hits_sql(iterations=8),
     description="HITS hubs & authorities (Kleinberg 1999): 8 power-method iterations with per-half-step L2 normalization, top-20 vertices by authority with their hub scores — the link-analysis complement of PageRank (endorsement-quality vs popularity); fixpoint unrolled into generated MATERIALIZED CTE stages, fully value-checked (operators/graph.py hits)",
 )
-def graph_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hits_authorities_frame(_edges(spark, sf_dir))
+def graph_hits_authorities(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    res = G.hits(graph_edges, iterations=8)
+    return (
+        res.select(
+            "id",
+            F.round("auth", 6).alias("auth"),
+            F.round("hub", 6).alias("hub"),
+        )
+        .orderBy(F.desc("auth"), F.asc("id"))
+        .limit(20)
+    )
 
 
 @query(
     "graph_adamic_adar_topk",
+    uses=("graph_wedge_scaffold",),
     # Link prediction — the "which edge is missing" member of the graph
     # family: Adamic–Adar over the canonical undirected graph. ln() is
     # confined to ONE per-center site quantized to integer ppm (the bm25
@@ -624,10 +598,14 @@ def graph_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY score_ppm DESC, u ASC, v ASC
         LIMIT 20
     """,
-    description="Adamic–Adar link prediction top-20 (the missing-edge ranking: friend suggestion / entity-linkage candidates): one adjacency self-equi-join on the center vertex for wedges, LEFT ANTI hash join drops existing edges, per-center 1/ln(deg) quantized to ppm BEFORE the exact BIGINT sum (bm25 ln recipe), TakeOrderedAndProject top-k with full tiebreaks — operators/graph.adamic_adar_topk, with a documented max_center_degree dial for hub-heavy graphs",
+    description="Adamic–Adar link prediction top-20 (the missing-edge ranking: friend suggestion / entity-linkage candidates): one adjacency self-equi-join on the center vertex for wedges, LEFT ANTI hash join drops existing edges, per-center 1/ln(deg) quantized to ppm BEFORE the exact BIGINT sum (bm25 ln recipe), TakeOrderedAndProject top-k with full tiebreaks — operators/graph.aa_scoring over the shared wedge scaffold (operators/graph.adamic_adar_topk carries the documented max_center_degree dial for hub-heavy graphs)",
 )
-def graph_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return G.adamic_adar_topk(_edges(spark, sf_dir), k=20)
+def graph_adamic_adar_topk(spark: SparkSession, sf_dir: str, graph_wedge_scaffold: DataFrame) -> DataFrame:
+    return (
+        G.aa_scoring(graph_wedge_scaffold)
+        .orderBy(F.desc("score_ppm"), F.asc("u"), F.asc("v"))
+        .limit(20)
+    )
 
 
 @query(
@@ -696,6 +674,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_adamic_adar_capped",
+    uses=("graph_edges",),
     # The hub-graph dial of graph_adamic_adar_topk, VALUE-verified
     # instead of just documented (VERDICT r10 item 8): centers with
     # deg > 95 are skipped (the standard exactness/cost trade at scale —
@@ -733,8 +712,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="Degree-capped Adamic–Adar top-20 (max_center_degree=95, binding at sf0.01): the documented hub-heavy-graph dial as an oracle-backed query — contrib centers filtered to 2 <= deg <= cap BEFORE the wedge self-join, so wedge volume is bounded by cap^2 per center; otherwise identical plan shape to graph_adamic_adar_topk (aggregate-then-anti-join, r11 ordering)",
 )
-def graph_adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return adamic_adar_capped_frame(_edges(spark, sf_dir))
+def graph_adamic_adar_capped(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
+    return G.adamic_adar_topk(graph_edges, k=20, max_center_degree=95)
 
 
 @query(
@@ -803,6 +782,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_jaccard_link_topk",
+    uses=("graph_wedge_scaffold",),
     # The normalized sibling of graph_adamic_adar_topk: Jaccard
     # coefficient over common neighborhoods. PURE BIGINT — counts,
     # degrees, and one round-half-up ppm division; no float anywhere
@@ -840,14 +820,19 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY jaccard_ppm DESC, u ASC, v ASC
         LIMIT 20
     """,
-    description="Jaccard-coefficient link prediction top-20 (the hub-penalizing sibling of Adamic-Adar — the two rankings disagree exactly on hub-adjacent candidates): one adjacency self-equi-join for wedges, aggregate-first LEFT ANTI against existing edges, two degree joins on the candidate-pair table, round-half-up integer ppm — pure BIGINT end to end, TakeOrderedAndProject top-k (operators/graph.jaccard_link_topk, same max_center_degree hub dial)",
+    description="Jaccard-coefficient link prediction top-20 (the hub-penalizing sibling of Adamic-Adar — the two rankings disagree exactly on hub-adjacent candidates): one adjacency self-equi-join for wedges, aggregate-first LEFT ANTI against existing edges, two degree joins on the candidate-pair table, round-half-up integer ppm — pure BIGINT end to end, TakeOrderedAndProject top-k (operators/graph.jaccard_scoring over the shared wedge scaffold)",
 )
-def graph_jaccard_link_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return G.jaccard_link_topk(_edges(spark, sf_dir), k=20)
+def graph_jaccard_link_topk(spark: SparkSession, sf_dir: str, graph_wedge_scaffold: DataFrame) -> DataFrame:
+    return (
+        G.jaccard_scoring(graph_wedge_scaffold)
+        .orderBy(F.desc("jaccard_ppm"), F.asc("u"), F.asc("v"))
+        .limit(20)
+    )
 
 
 @query(
     "graph_preferential_attachment_topk",
+    uses=("graph_wedge_scaffold",),
     # The trio-completing link-prediction ranking: where AA weights rare
     # common neighbors and Jaccard penalizes hubs, PA bets ON hubs
     # (deg(u)·deg(v)) — the three rankings disagree exactly on
@@ -884,7 +869,11 @@ def graph_jaccard_link_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY pa_score DESC, u ASC, v ASC
         LIMIT 20
     """,
-    description="Preferential-attachment link prediction top-20 (the hub-betting member of the AA/Jaccard/PA trio — the three disagree exactly on hub-adjacent candidates): 2-hop candidate restriction (wedge-bounded, never |V|^2), aggregate-first LEFT ANTI, two degree joins, deg(u)*deg(v) pure BIGINT, TakeOrderedAndProject (operators/graph.preferential_attachment_topk)",
+    description="Preferential-attachment link prediction top-20 (the hub-betting member of the AA/Jaccard/PA trio — the three disagree exactly on hub-adjacent candidates): 2-hop candidate restriction (wedge-bounded, never |V|^2), aggregate-first LEFT ANTI, two degree joins, deg(u)*deg(v) pure BIGINT, TakeOrderedAndProject (operators/graph.pa_scoring over the shared wedge scaffold)",
 )
-def graph_preferential_attachment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return G.preferential_attachment_topk(_edges(spark, sf_dir), k=20)
+def graph_preferential_attachment_topk(spark: SparkSession, sf_dir: str, graph_wedge_scaffold: DataFrame) -> DataFrame:
+    return (
+        G.pa_scoring(graph_wedge_scaffold)
+        .orderBy(F.desc("pa_score"), F.asc("u"), F.asc("v"))
+        .limit(20)
+    )

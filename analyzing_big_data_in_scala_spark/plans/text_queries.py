@@ -20,7 +20,7 @@ from ..operators import tfidf as T
 from ..operators.sequence import CORR_PPM_SQL as _SEQ_CORR_PPM_SQL
 from ..operators.sequence import SLOPE_PPM_SQL as _SEQ_SLOPE_PPM_SQL
 from ..sources.catalog import load_table
-from .registry import query
+from .registry import query, shared
 
 # DuckDB twin of functions.text.tokens(): one row per (doc_id, term).
 _SQL_TOKS = r"""
@@ -612,18 +612,26 @@ lang_pred AS (
 """
 
 
+@shared("doc_langid_profile")
+def _langid_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The classifier pass (language_profile_table) the three langid
+    queries share: ~10 regex scans per doc, their dominant cost."""
+    from ..operators.curation import language_profile_table
+
+    return language_profile_table(_docs(spark, sf_dir))
+
+
 @query(
     "doc_language_id",
+    uses=("doc_langid_profile",),
     oracle=f"""
         WITH {_SQL_TOKS_UNI}{_SQL_LANGID}
         SELECT doc_id, pred_lang, en_ratio FROM lang_pred
     """,
     description="Multilingual language ID (r13, VERDICT r12 item 2): Unicode script-block character signal over raw text (CJK/kana/Hangul/Cyrillic/Arabic/Greek/Hebrew/Devanagari — survives any tokenizer, incl. whitespace-free zh) with >=30% letter-mass precedence and a kana>=10% zh/ja split, falling back to the en/de/fr/es stop-word-profile argmax over unicode-domain tokens (accented forms now in the profiles); MAP-ONLY plan — zero shuffles, every decision pure BIGINT (operators/curation.py language_profile_table; real zh/ru/ja separation pinned cross-engine in tests/test_r13_unicode.py)",
 )
-def doc_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.curation import language_profile_table
-
-    return language_profile_table(_docs(spark, sf_dir))
+def doc_language_id(spark: SparkSession, sf_dir: str, doc_langid_profile: DataFrame) -> DataFrame:
+    return doc_langid_profile
 
 
 # Script blocks + latin in the dominance tie-break order (alphabetical by
@@ -1083,6 +1091,7 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_langid_confusion",
+    uses=("doc_langid_profile",),
     # The fixture's `lang` column is GROUND TRUTH, so the heuristic
     # language gate gets a real evaluation: the confusion matrix of
     # actual language vs the stopword-ratio prediction, with each cell's
@@ -1108,18 +1117,9 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="Language-ID evaluation against the fixture's ground-truth lang column: confusion matrix of actual vs the r13 Unicode classifier's prediction (script-block signal over the stop-word-profile argmax) with per-actual-language cell shares in round-half-up ppm (the 'how much zh/de/fr/es leaks through the en gate' audit); one token aggregate + a documents join + two tiny hash aggregates. NOTE the synthetic fixture's text is language-signal-free (all lang labels share one 31-term vocabulary), so this matrix measures the gate's behavior on signal-free input; the classifier's real zh/ru/ja/accented separation is pinned cross-engine on a genuine multilingual micro-fixture in tests/test_r13_unicode.py",
 )
-def doc_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    preds = doc_language_id(spark, sf_dir).select("doc_id", "pred_lang")
+def doc_langid_confusion(spark: SparkSession, sf_dir: str, doc_langid_profile: DataFrame) -> DataFrame:
+    preds = doc_langid_profile.select("doc_id", "pred_lang")
     docs = _docs(spark, sf_dir).select("doc_id", "lang")
-    return langid_confusion_frame(preds, docs)
-
-
-def langid_confusion_frame(preds: DataFrame, docs: DataFrame) -> DataFrame:
-    """Finalize stage of doc_langid_confusion over an already-computed
-    (doc_id, pred_lang) prediction frame — factored (r14, VERDICT r13
-    item 5) so bench.py can reuse ONE classifier pass across the three
-    langid consumers (the ivfpq_agreement_frame precedent); the registry
-    query above stays self-contained."""
     cells = (
         preds.join(docs, "doc_id")
         .groupBy("lang", "pred_lang")
@@ -1137,6 +1137,7 @@ def langid_confusion_frame(preds: DataFrame, docs: DataFrame) -> DataFrame:
 
 @query(
     "doc_language_mix_by_source",
+    uses=("doc_langid_profile",),
     # The language classifier turned downstream curation dial: each
     # source's predicted-language composition (which feeds pick the
     # multilingual mixer, which sources are en-only) with per-source
@@ -1160,19 +1161,9 @@ def langid_confusion_frame(preds: DataFrame, docs: DataFrame) -> DataFrame:
     """,
     description="Per-source predicted-language mix (the curation mixer's composition dial, fed by the r13 Unicode classifier — script-block signal over the stop-word-profile argmax): language_profile_table joined to the source dimension, two tiny hash aggregates, per-source shares in round-half-up ppm — pure BIGINT finalize",
 )
-def doc_language_mix_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.curation import language_profile_table
-
-    docs = _docs(spark, sf_dir)
-    preds = language_profile_table(docs).select("doc_id", "pred_lang")
+def doc_language_mix_by_source(spark: SparkSession, sf_dir: str, doc_langid_profile: DataFrame) -> DataFrame:
+    preds = doc_langid_profile.select("doc_id", "pred_lang")
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    return language_mix_frame(preds, src)
-
-
-def language_mix_frame(preds: DataFrame, src: DataFrame) -> DataFrame:
-    """Finalize stage of doc_language_mix_by_source over an
-    already-computed (doc_id, pred_lang) frame — factored (r14) for the
-    bench-side shared-classifier pass; see langid_confusion_frame."""
     cells = (
         preds.join(src, "doc_id")
         .groupBy("source", "pred_lang")

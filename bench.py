@@ -5,6 +5,10 @@ and prints ONE JSON line:
 
 Each query is fully executed via a `noop`-format write (all partitions
 computed, nothing shipped to the driver) — honest end-to-end plan cost.
+
+Shared inputs (plans/registry.py `shared`) are built once each, in
+dependency order, and timed under `<name>_build`; a query that declares
+`uses=` is then timed as its finalize alone over the built inputs.
 """
 
 from __future__ import annotations
@@ -15,9 +19,15 @@ import re
 import sys
 import time
 
+from pyspark.sql import DataFrame
+
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from analyzing_big_data_in_scala_spark.plans.registry import QUERIES  # noqa: E402
+from analyzing_big_data_in_scala_spark.plans.registry import (  # noqa: E402
+    QUERIES,
+    SHARED,
+    shared_order,
+)
 from analyzing_big_data_in_scala_spark.session import get_spark  # noqa: E402
 import analyzing_big_data_in_scala_spark.plans  # noqa: F401,E402
 
@@ -243,373 +253,35 @@ HEADLINE = [
 ]
 
 
-def _prepare_ivfpq_agreement(spark, sf_dir: str):
-    """Build-once/search-many split for the persisted-index agreement
-    query (VERDICT r8 item 4): rebuilding BOTH indexes (persisted tables +
-    live in-memory) inside every bench sample cost 22 s/sample at sf0.1 —
-    10% of the r8 headline — while the operator's real usage amortizes one
-    build across every search. Returns (build_sec, run_thunk): the build
-    is timed ONCE and reported as its own `similarity_ivfpq_index_build`
-    entry; the thunk produces the agreement frame over the prebuilt
-    indexes and is what the median-of-3 loop measures. The REGISTRY query
-    stays self-contained (build + search) for the correctness driver —
-    this split changes only what bench times, not any query's semantics."""
-    from pyspark.sql import functions as F
-
-    from analyzing_big_data_in_scala_spark.operators import pq as PQ
-    from analyzing_big_data_in_scala_spark.plans.pipeline_queries import (
-        ivfpq_agreement_frame,
-    )
-    from analyzing_big_data_in_scala_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 3)
-    # r13 (VERDICT r12 item 6): reuse the geometry _prepare_ivfpq_profile
-    # already trained over the SAME sf embeddings instead of training a
-    # second one here — this entry now times exactly the persisted
-    # bucketed-table materialization (the artifact build_ivfpq_index
-    # adds on top of the geometry), and the agreement query's live side
-    # IS the shared geometry. PREPARED order guarantees the profile
-    # factory (the trainer) runs first; the fallback build keeps the
-    # entry self-sufficient if that ever changes.
-    live_index = _SHARED.get("ivfpq_geometry")
-    if live_index is None:  # pragma: no cover - ordering guard
-        # ADVICE r13: the handoff couples two PREPARED factories through
-        # dict insertion order; if a reorder ever lands here, the entry
-        # silently goes back to timing a full geometry train — record
-        # that in the artifact so the regression is visible, not latent.
-        _SHARED["ivfpq_fallback_trained"] = True
-        live_index = PQ.ivfpq_build(emb)
-        for frame in live_index.values():
-            if hasattr(frame, "write"):
-                frame.write.mode("overwrite").format("noop").save()
-        _SHARED["ivfpq_geometry"] = live_index
-    t0 = time.perf_counter()
-    PQ.build_ivfpq_index(emb, prefix="bench_ivfpq_idx", index=live_index)
-    build_sec = time.perf_counter() - t0
-
-    def run():
-        return ivfpq_agreement_frame(
-            spark, emb, probes, prefix="bench_ivfpq_idx", live_index=live_index
-        )
-
-    return build_sec, run
-
-
-def _prepare_pq_profile(spark, sf_dir: str):
-    """Build-once/search-many split for the PQ recall profile: the m=16
-    codebook train (2 Lloyd rounds) + full-corpus encode is the one-shot
-    build; the per-sample measurement is the ADC + rerank searches plus
-    the exact brute-force baseline they are graded against."""
-    from pyspark.sql import functions as F
-
-    from analyzing_big_data_in_scala_spark.operators import pq as PQ
-    from analyzing_big_data_in_scala_spark.plans.pipeline_queries import (
-        pq_profile_frame,
-    )
-    from analyzing_big_data_in_scala_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 3)
-    t0 = time.perf_counter()
-    # The profile consumes the codebook in many broadcasts per sample —
-    # checkpoint it once here (measured 6.8 s vs 3.8 s per profile pass;
-    # see the registry query's comment in pipeline_queries).
-    cents = PQ.pq_train(emb, m=16, k=16, rounds=2).localCheckpoint(eager=False)
-    codes = PQ.pq_encode(emb, cents, m=16).localCheckpoint(eager=False)
-    # Force the lazy checkpoints so the build pays its own cost here.
-    for frame in (cents, codes):
-        frame.write.mode("overwrite").format("noop").save()
-    build_sec = time.perf_counter() - t0
-
-    def run():
-        return pq_profile_frame(emb, probes, cents, codes)
-
-    return build_sec, run
-
-
-def _prepare_ivfpq_profile(spark, sf_dir: str):
-    """Build-once/search-many split for the IVF-PQ recall profile: the
-    coarse-router + sub-codebook geometry build is one-shot; per-sample
-    cost is the nprobe=4/8 searches plus the exact baseline."""
-    from pyspark.sql import functions as F
-
-    from analyzing_big_data_in_scala_spark.operators import pq as PQ
-    from analyzing_big_data_in_scala_spark.plans.pipeline_queries import (
-        ivfpq_profile_frame,
-    )
-    from analyzing_big_data_in_scala_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 3)
-    t0 = time.perf_counter()
-    index = PQ.ivfpq_build(emb)
-    for frame in index.values():
-        if hasattr(frame, "write"):
-            frame.write.mode("overwrite").format("noop").save()
-    build_sec = time.perf_counter() - t0
-    # Stash the trained geometry for _prepare_ivfpq_agreement (r13,
-    # VERDICT r12 item 6): the agreement entry reuses it as its live
-    # index instead of training the same geometry a second time.
-    _SHARED["ivfpq_geometry"] = index
-
-    def run():
-        return ivfpq_profile_frame(emb, probes, index)
-
-    return build_sec, run
-
-
-def _prepare_langid_family(spark, sf_dir: str):
-    """ONE classifier pass for the three langid consumers (r14, VERDICT
-    r13 item 5): doc_language_id, doc_langid_confusion and
-    doc_language_mix_by_source each re-ran the full ~10-regex-per-doc
-    script-signal scan (the r13 Unicode classifier's priced-in cost —
-    1.9-2.2x their r12 numbers), but the classifier output is ONE frame
-    all three consume. The profile table is materialized once (timed,
-    reported as doc_langid_profile_build) and the consumers' finalize
-    stages run over it; the REGISTRY queries stay self-contained for the
-    driver (the ivfpq geometry-sharing precedent)."""
-    from analyzing_big_data_in_scala_spark.operators.curation import (
-        language_profile_table,
-    )
-    from analyzing_big_data_in_scala_spark.sources.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    t0 = time.perf_counter()
-    profile = language_profile_table(docs).localCheckpoint(eager=True)
-    build_sec = time.perf_counter() - t0
-    _SHARED["langid_profile"] = profile
-
-    def run():
-        return profile
-
-    return build_sec, run
-
-
-def _langid_confusion_shared(spark, sf_dir: str):
-    from analyzing_big_data_in_scala_spark.plans.text_queries import (
-        langid_confusion_frame,
-    )
-    from analyzing_big_data_in_scala_spark.sources.catalog import load_table
-
-    preds = _SHARED["langid_profile"].select("doc_id", "pred_lang")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-
-    def run():
-        return langid_confusion_frame(preds, docs)
-
-    return run
-
-
-def _language_mix_shared(spark, sf_dir: str):
-    from analyzing_big_data_in_scala_spark.plans.text_queries import (
-        language_mix_frame,
-    )
-    from analyzing_big_data_in_scala_spark.sources.catalog import load_table
-
-    preds = _SHARED["langid_profile"].select("doc_id", "pred_lang")
-    src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-
-    def run():
-        return language_mix_frame(preds, src)
-
-    return run
-
-
-def _prepare_graph_edges(spark, sf_dir: str):
-    """ONE materialized edges_from_events pass for the whole graph bench
-    family (r15, VERDICT r14 item 6 — the wedge-scaffold/langid sharing
-    precedent): the 11 iterative/graph entries below each re-derived the
-    SAME (events LEAD-window -> filter) edge list per sample. The edge
-    frame is checkpointed once (timed, reported as graph_edges_build);
-    every consumer's per-sample cost is its actual algorithm over the
-    shared frame, composed through the SAME plans.graph_queries
-    `*_frame(edges)` helpers the registry queries use — the bench can
-    never time a stale formula. REGISTRY queries stay self-contained for
-    the driver."""
-    from analyzing_big_data_in_scala_spark.operators import graph as G
-    from analyzing_big_data_in_scala_spark.plans.graph_queries import (
-        pagerank_frame,
-    )
-    from analyzing_big_data_in_scala_spark.sources.catalog import load_table
-
-    t0 = time.perf_counter()
-    edges = G.edges_from_events(
-        load_table(spark, sf_dir, "events")
-    ).localCheckpoint(eager=True)
-    build_sec = time.perf_counter() - t0
-    _SHARED["graph_edges"] = edges
-
-    def run():
-        return pagerank_frame(edges)
-
-    return build_sec, run
-
-
-def _graph_family_shared(frame_fn_name):
-    """POST_PREPARED thunk factory: look up the shared edges frame and the
-    named `*_frame` helper from plans.graph_queries."""
-
-    def factory(spark, sf_dir: str):
-        import analyzing_big_data_in_scala_spark.plans.graph_queries as GQ
-
-        edges = _SHARED["graph_edges"]
-        frame_fn = getattr(GQ, frame_fn_name)
-
-        def run():
-            return frame_fn(edges)
-
-        return run
-
-    return factory
-
-
-def _prepare_wedge_family(spark, sf_dir: str):
-    """ONE wedge-candidate scaffold for the link-prediction trio (r14,
-    the langid-family precedent): adamic_adar/jaccard/preferential each
-    re-derived the same 2-hop candidate table (canonical edges ->
-    adjacency -> wedge self-join -> aggregate -> LEFT ANTI) and differ
-    only in the scoring projection + top-k. The scaffold is built once
-    WITH BOTH the AA ppm weights and the endpoint degrees (a superset of
-    what each scorer needs — the union costs two extra small joins,
-    priced into the build entry), materialized (timed, reported as
-    graph_wedge_scaffold_build), and the three consumers' per-sample
-    cost is their scoring select + TakeOrderedAndProject. The REGISTRY
-    queries stay self-contained for the driver."""
-    from pyspark.sql import functions as F
-
-    from analyzing_big_data_in_scala_spark.operators import graph as G
-    from analyzing_big_data_in_scala_spark.sources.catalog import load_table
-
-    # r15: consume the shared checkpointed edge list when the graph-edges
-    # factory already built it (PREPARED order), so this entry times the
-    # scaffold pass only, not a second events LEAD-window derivation.
-    edges = _SHARED.get("graph_edges")
-    if edges is None:  # pragma: no cover - ordering guard
-        edges = G.edges_from_events(load_table(spark, sf_dir, "events"))
-    t0 = time.perf_counter()
-    scaffold = G._wedge_candidate_pairs(
-        edges,
-        max_center_degree=None,
-        center_weight_sql=G.AA_CONTRIB_PPM_SQL,
-        with_endpoint_degrees=True,
-    ).localCheckpoint(eager=True)
-    build_sec = time.perf_counter() - t0
-    _SHARED["wedge_scaffold"] = scaffold
-
-    def run():
-        # adamic_adar_topk's exact output over the shared scaffold —
-        # scoring projection imported from operators/graph.py (r15,
-        # ADVICE r14: no duplicated formula in the bench).
-        return (
-            G.aa_scoring(scaffold)
-            .orderBy(F.desc("score_ppm"), F.asc("u"), F.asc("v"))
-            .limit(20)
-        )
-
-    return build_sec, run
-
-
-def _jaccard_link_shared(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from analyzing_big_data_in_scala_spark.operators import graph as G
-
-    scaffold = _SHARED["wedge_scaffold"]
-
-    def run():
-        return (
-            G.jaccard_scoring(scaffold)
-            .orderBy(F.desc("jaccard_ppm"), F.asc("u"), F.asc("v"))
-            .limit(20)
-        )
-
-    return run
-
-
-def _preferential_attachment_shared(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from analyzing_big_data_in_scala_spark.operators import graph as G
-
-    scaffold = _SHARED["wedge_scaffold"]
-
-    def run():
-        return (
-            G.pa_scoring(scaffold)
-            .orderBy(F.desc("pa_score"), F.asc("u"), F.asc("v"))
-            .limit(20)
-        )
-
-    return run
-
-
-# Cross-factory shared state (the IVF-PQ geometry both ivfpq entries
-# derive from; the r14 shared langid profile frame and wedge scaffold).
-_SHARED: dict = {}
-
-
-# Bench entries measured over a one-shot prepared state instead of the
-# registry fn. Key = the headline name whose per-sample measurement becomes
-# search-only; value = (build_entry_name, factory). The build time lands in
-# the results under build_entry_name (single-shot, annotated in notes).
-PREPARED = {
-    # ORDER MATTERS (r13): the geometry trainer (recall profile) runs
-    # first and stashes its trained IVF-PQ geometry in _SHARED; the
-    # agreement factory reuses it, so similarity_ivfpq_index_build times
-    # ONLY the persisted bucketed-table materialization. r15: the graph
-    # edges factory runs BEFORE the wedge factory so the scaffold build
-    # consumes the shared edge list.
-    "graph_pagerank": (
-        "graph_edges_build",
-        _prepare_graph_edges,
-    ),
-    "similarity_ivfpq_recall_profile": (
-        "similarity_ivfpq_geometry_build",
-        _prepare_ivfpq_profile,
-    ),
-    "similarity_ivfpq_indexed_agreement": (
-        "similarity_ivfpq_index_build",
-        _prepare_ivfpq_agreement,
-    ),
-    "similarity_pq_recall_profile": (
-        "similarity_pq_codebook_build",
-        _prepare_pq_profile,
-    ),
-    # r14: one classifier pass for the langid family; the two consumers
-    # below (POST_PREPARED) reuse the stashed profile frame.
-    "doc_language_id": (
-        "doc_langid_profile_build",
-        _prepare_langid_family,
-    ),
-    # r14: one wedge-candidate scaffold for the link-prediction trio;
-    # jaccard + preferential (POST_PREPARED) reuse it.
-    "graph_adamic_adar_topk": (
-        "graph_wedge_scaffold_build",
-        _prepare_wedge_family,
-    ),
-}
-
-# Entries whose per-sample thunk derives from _SHARED state stashed by a
-# PREPARED factory, but which have NO build cost of their own (so no
-# *_build entry). Factories run ONCE, after the PREPARED loop.
-POST_PREPARED = {
-    "doc_langid_confusion": _langid_confusion_shared,
-    "doc_language_mix_by_source": _language_mix_shared,
-    "graph_jaccard_link_topk": _jaccard_link_shared,
-    "graph_preferential_attachment_topk": _preferential_attachment_shared,
-    # r15: the graph family over the shared edges frame (same *_frame
-    # helpers as the registry queries — see _prepare_graph_edges).
-    "graph_out_degrees": _graph_family_shared("out_degrees_frame"),
-    "graph_triangle_counts": _graph_family_shared("triangle_counts_frame"),
-    "graph_bfs_hops": _graph_family_shared("bfs_hops_frame"),
-    "graph_sssp_weighted": _graph_family_shared("sssp_weighted_frame"),
-    "graph_kcore_membership": _graph_family_shared("kcore_membership_frame"),
-    "graph_label_propagation": _graph_family_shared("label_propagation_frame"),
-    "graph_trustrank_from_seeds": _graph_family_shared("trustrank_frame"),
-    "graph_hits_authorities": _graph_family_shared("hits_authorities_frame"),
-    "graph_adamic_adar_capped": _graph_family_shared("adamic_adar_capped_frame"),
-}
+def materialize(value):
+    """The bench's one rule for a built shared input: every DataFrame in it
+    is checkpointed eagerly, so the build is paid (and timed) once and the
+    consumers read its blocks."""
+    if isinstance(value, DataFrame):
+        return value.localCheckpoint(eager=True)
+    if isinstance(value, dict):
+        return {k: materialize(v) for k, v in value.items()}
+    return value
+
+
+def build_input(spark, sf_dir: str, name: str, inputs: dict):
+    """Build shared input `name` from the already-built `inputs` it uses,
+    materialized by the bench's rule."""
+    spec = SHARED[name]
+    return materialize(spec.build(spark, sf_dir, **{u: inputs[u] for u in spec.uses}))
+
+
+def query_frame(spark, sf_dir: str, name: str, inputs: dict) -> DataFrame:
+    """What the bench times for `name`: the finalize over the built shared
+    inputs for a `uses=` query, the whole query otherwise."""
+    spec = QUERIES[name]
+    if not spec.uses:
+        return spec.fn(spark, sf_dir)
+    return spec.finalize(spark, sf_dir, **{u: inputs[u] for u in spec.uses})
+
+
+def _noop(df: DataFrame) -> None:
+    df.write.mode("overwrite").format("noop").save()
 
 
 def main() -> None:
@@ -621,87 +293,64 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # The per-query clearCache() + ContextCleaner GC occasionally races a
     # late task-end, logging benign "attempted to access non-existent
-    # accumulator" ERROR stack traces from DAGScheduler that pollute the
-    # captured tail of the artifact of record (VERDICT r10 item 5). Raise
-    # that ONE logger to FATAL: a real scheduler failure still fails its
-    # job and surfaces as a Python exception in this process — nothing a
-    # reader of BENCH_r{N}.json needs is masked.
+    # accumulator" ERROR stack traces from DAGScheduler into the captured
+    # tail of the output. Raise that ONE logger to FATAL: a real scheduler
+    # failure still fails its job and surfaces as a Python exception here.
     _jvm = spark._jvm
     _jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.scheduler.DAGScheduler",
         _jvm.org.apache.logging.log4j.Level.FATAL,
     )
 
-    # JVM + whole-stage-codegen warmup outside the timed region: run every
-    # headline query once at the smallest fixture so janino compilation and
-    # first-touch file listing don't pollute the measured steady state.
+    # JVM + whole-stage-codegen warmup outside the timed region: run the
+    # timed path (shared inputs built and materialized, then every headline
+    # query) once at the smallest fixture so janino compilation and
+    # first-touch file listing don't pollute the measured steady state. A
+    # query that raises fails the bench here.
     warm_dir = "/root/testdata/sf0.001"
+    inputs: dict = {}
+    for name in shared_order(SHARED):
+        inputs[name] = build_input(spark, warm_dir, name, inputs)
     for name in HEADLINE:
-        if name in PREPARED:
-            continue  # warmed by its own prepare below
-        try:
-            QUERIES[name].fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
-
+        _noop(query_frame(spark, warm_dir, name, inputs))
     spark.catalog.clearCache()
 
-    # Build-once state for PREPARED entries: the build is timed and
-    # reported under its own *_build name; the per-sample loop then
-    # measures search-only cost over the prebuilt state (the operator's
-    # real usage shape). r12 (VERDICT r11 item 3): builds are now
-    # MEDIAN-OF-3 like every recurring entry — the single-sample form
-    # swung 25.7→39.2 s between driver runs with zero code change, so a
-    # one-shot number was pure noise. Each factory rebuilds its persisted
-    # state from scratch (mode=overwrite), so the three samples are
-    # like-for-like; the search thunks run over the LAST build's state.
+    # Shared inputs, median-of-3 each: every sample rebuilds from scratch
+    # over the inputs it uses (persisted tables are overwritten), and the
+    # consumers run over the last build.
     build_samples: dict[str, list[float]] = {}
-    build_times: dict[str, float] = {}
-    prepared_runs: dict[str, object] = {}
-    for name, (build_name, factory) in PREPARED.items():
-        samples_b: list[float] = []
-        run = None
+    for name in shared_order(SHARED):
+        samples_b = build_samples[f"{name}_build"] = []
         for _ in range(3):
-            build_sec, run = factory(spark, sf_dir)
-            samples_b.append(build_sec)
+            t0 = time.perf_counter()
+            inputs[name] = build_input(spark, sf_dir, name, inputs)
+            samples_b.append(time.perf_counter() - t0)
             spark.catalog.clearCache()
-        build_samples[build_name] = [round(t, 3) for t in samples_b]
-        build_times[build_name] = round(sorted(samples_b)[1], 3)
-        prepared_runs[name] = run
-        run().write.mode("overwrite").format("noop").save()
-    for name, factory in POST_PREPARED.items():
-        run = factory(spark, sf_dir)
-        prepared_runs[name] = run
-        run().write.mode("overwrite").format("noop").save()  # warm
-    spark.catalog.clearCache()
+    build_times = {k: round(sorted(v)[1], 3) for k, v in build_samples.items()}
 
-    # Median-of-3 per query (VERDICT r2 item 7): single runs drifted ~1.5x
-    # between rounds purely from host contention, drowning real plan
-    # regressions. Three round-robin passes (not back-to-back per query, so
-    # a transient host stall can't poison all samples of one query) and the
-    # per-query median make round-over-round deltas attributable to plans.
+    # Median-of-3 per query in three round-robin passes (not back-to-back
+    # per query, so a transient host stall can't poison all samples of
+    # one query).
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+
+    def sample(name: str) -> None:
+        t0 = time.perf_counter()
+        _noop(query_frame(spark, sf_dir, name, inputs))
+        samples[name].append(time.perf_counter() - t0)
+        # Intra-query caches are scoped to their own query; dropping them
+        # between measurements keeps later queries from paying earlier
+        # queries' memory pressure.
+        spark.catalog.clearCache()
+
     for _ in range(3):
         for name in HEADLINE:
-            if name in prepared_runs:
-                frame_fn = lambda: prepared_runs[name]()  # noqa: B023
-            else:
-                frame_fn = lambda: QUERIES[name].fn(spark, sf_dir)  # noqa: B023
-            t0 = time.perf_counter()
-            frame_fn().write.mode("overwrite").format("noop").save()
-            samples[name].append(time.perf_counter() - t0)
-            # Intra-query caches (jaccard/triangle/etc.) are scoped to their
-            # own query; dropping them between measurements keeps later
-            # queries from paying earlier queries' memory pressure.
-            spark.catalog.clearCache()
+            sample(name)
 
-    # Contention-flapper taming (r13, VERDICT r12 item 5): sub-3s entries
-    # whose 3 samples spread >3x are dominated by trigger-scheduling /
-    # host-contention noise, not plan cost (r12 worst:
-    # streaming_first_seen_per_user 10.3x) — give exactly those entries 2
-    # extra round-robin samples and take the median-of-5, which a single
-    # stalled sample cannot flip. The flapper set is data-driven per run
-    # and recorded in BENCH_DETAIL under "resampled".
+    # Contention flappers: sub-3s entries whose 3 samples spread >3x are
+    # dominated by scheduling / host-contention noise, not plan cost —
+    # give exactly those 2 extra round-robin samples and take the
+    # median-of-5, which a single stalled sample cannot flip. Recorded in
+    # BENCH_DETAIL under "resampled".
     med3 = {name: sorted(ts)[1] for name, ts in samples.items()}
     flappers = [
         name
@@ -710,25 +359,14 @@ def main() -> None:
     ]
     for _ in range(2):
         for name in flappers:
-            if name in prepared_runs:
-                frame_fn = lambda: prepared_runs[name]()  # noqa: B023
-            else:
-                frame_fn = lambda: QUERIES[name].fn(spark, sf_dir)  # noqa: B023
-            t0 = time.perf_counter()
-            frame_fn().write.mode("overwrite").format("noop").save()
-            samples[name].append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
+            sample(name)
 
     times = {
         name: round(sorted(ts)[len(ts) // 2], 3) for name, ts in samples.items()
     }
-    # Variance visibility (VERDICT r11 item 3): a >2x sample spread used
-    # to flip medians silently round-over-round (similarity_projected_topk
-    # [2.96, 5.88, 6.65] vs [2.53, 2.24, 6.57]); the per-entry spread
-    # (max/min of the samples) makes contention-flapped entries
-    # identifiable in the JSON, and the min-of-N subtotal gives a
-    # contention-robust round-over-round comparator WITHOUT changing the
-    # headline metric's definition.
+    # Per-entry spread (max/min) makes contention-flapped entries visible;
+    # the min-of-N subtotal is a contention-robust comparator that leaves
+    # the headline metric's definition alone.
     all_samples = {**samples, **build_samples}
     spread = {
         name: round(max(ts) / min(ts), 2) if min(ts) > 0 else None
@@ -737,22 +375,15 @@ def main() -> None:
     recurring_min_total = round(
         sum(sorted(ts)[0] for ts in samples.values()), 3
     )
-    # Round-over-round comparability (VERDICT r9 item 6): the one-shot
-    # *_build entries share the headline total with the recurring queries,
-    # which forced manual decomposition every r-over-r diff. Report the
-    # recurring subtotal (median-of-3 queries only) alongside the grand
-    # total so the delta is readable without archaeology.
+    # The recurring subtotal (headline queries only) next to the grand
+    # total, which also counts the *_build entries.
     recurring_total = round(sum(times.values()), 3)
-    times.update(build_times)  # index builds, median-of-3 as of r12
+    times.update(build_times)
     total = round(sum(times.values()), 3)
 
-    # Full per-query map goes to a side file; the printed line stays compact.
-    # The driver captures only the tail of stdout (BENCH_r04.json had
-    # "parsed": null because the full 73-query map overflowed its 2000-char
-    # window, leaving a truncated, unparseable line). Keep the printed JSON
-    # comfortably under that window: total + the 15 slowest queries at
-    # 2-decimal precision (~600 chars), with everything else in
-    # BENCH_DETAIL.json next to this script.
+    # Full per-query map goes to a side file; the printed line stays
+    # compact (total + the 15 slowest queries at 2 decimals, ~600 chars)
+    # because the driver captures only a ~2000-char tail of stdout.
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     with open(detail_path, "w") as f:
         json.dump(
@@ -770,47 +401,22 @@ def main() -> None:
                 "spread_max_over_min": spread,
                 "resampled": sorted(flappers),
                 "recurring_min_total": recurring_min_total,
-                # ADVICE r13: True only if the agreement factory had to
-                # train its OWN geometry (PREPARED order regression —
-                # similarity_ivfpq_index_build then re-measures the
-                # double-train the r13 sharing removed). Expected: false.
-                "ivfpq_fallback_trained": bool(
-                    _SHARED.get("ivfpq_fallback_trained", False)
-                ),
                 "notes": {
-                    # The three r8 ANN index queries each BUILD their
-                    # index from scratch inside the measured region
-                    # (persisted bucketed-table writes, Lloyd rounds,
-                    # streamed appends) — that build is the tested
-                    # contract, and at fixture scale the time is
-                    # JOB-COUNT bound (dozens of small Spark jobs), not
-                    # data bound: the scale probe measured the PQ
-                    # train+encode+search chain FLAT at 16x data (1.4x).
-                    "similarity_ivfpq_index_build": "as of r13 this times ONLY the persisted bucketed code/centroid/codebook table materialization: the IVF-PQ geometry is trained once by similarity_ivfpq_geometry_build and SHARED (VERDICT r12 item 6 — the r12 entry double-trained the same geometry, ~10s of redundant one-shot cost); median-of-3, job-count bound at fixture scale",
-                    "similarity_ivfpq_indexed_agreement": "search-only per sample as of r9 (VERDICT r8 item 4): agreement frame over the prebuilt indexes — the build cost moved to similarity_ivfpq_index_build; the registry query is unchanged (still self-contained build+search for the driver)",
-                    "similarity_pq_codebook_build": "PQ train (m=16 x 16 centroids, 2 Lloyd rounds) + full-corpus encode, median-of-3 as of r12; similarity_pq_recall_profile then measures ADC+rerank search (plus the exact baseline it is graded against) per sample",
-                    "similarity_ivfpq_geometry_build": "IVF-PQ geometry build (coarse router + per-cell sub-codebooks + code table), median-of-3 as of r12; similarity_ivfpq_recall_profile then measures the nprobe=4/8 searches (plus the exact baseline) per sample",
-                    "doc_langid_profile_build": "r14 (VERDICT r13 item 5): ONE materialization of the language_profile_table classifier pass (the ~10-regex-per-doc Unicode script signal — the r13 capability cost), median-of-3, shared by the three langid consumers below; registry queries stay self-contained for the driver",
-                    "doc_language_id": "per-sample cost is reading the shared checkpointed profile frame; the classifier pass itself is timed once under doc_langid_profile_build",
-                    "doc_langid_confusion": "finalize-only per sample as of r14 (confusion join + two tiny aggregates over the shared profile frame)",
-                    "doc_language_mix_by_source": "finalize-only per sample as of r14 (source join + two tiny aggregates over the shared profile frame)",
-                    "graph_wedge_scaffold_build": "r14: ONE materialization of the link-prediction candidate scaffold (adjacency -> wedge self-join -> aggregate-first -> LEFT ANTI, with BOTH the AA ppm weights and the endpoint degrees), median-of-3, shared by the trio below; registry queries stay self-contained for the driver (the langid/ivfpq sharing precedent)",
-                    "graph_adamic_adar_topk": "scoring select + TakeOrderedAndProject over the shared wedge scaffold as of r14; the scaffold pass itself is timed once under graph_wedge_scaffold_build",
-                    "graph_jaccard_link_topk": "finalize-only per sample as of r14 (jaccard ppm projection + top-k over the shared wedge scaffold)",
-                    "graph_preferential_attachment_topk": "finalize-only per sample as of r14 (degree-product projection + top-k over the shared wedge scaffold)",
-                    "streaming_ivfpq_index_ingest": "cost = offline geometry build + per-file micro-batch appends; the drain is the tested contract. r10 decomposition (warm, sf0.1): offline ivfpq_build 7.2s (job-count bound, the contract) + drain ~5.9s (2 batches x ~1.8s fold job-chain; trigger scheduling itself ~1.3s) + agreement searches ~3.5s. The r9 verdict's 'trigger scheduling' attribution was partly wrong — the per-batch FOLD job chain dominated the drain, so the fixture now stages 2 files instead of 4 (the minimum multi-batch commute evidence), saving ~3.5s; the remaining wall is the offline build, same class as the *_build one-shots",
-                    # r8 isolated re-measure (VERDICT r7 item 6): the
-                    # corpus_curation_funnel r5->r7 drift (5.1 -> 6.5 s) does
-                    # NOT survive isolation as a plan change. Clean-session
-                    # solo runs at sf0.1 measured 8.2-10.6 s (median 9.4,
-                    # n=5) while the same round's in-bench median was 5.8 s
-                    # (FASTER than r7): the query's cost is the lazily
-                    # checkpointed key-table materialization job, whose time
-                    # tracks JVM warm state (codegen compile + GC), not the
-                    # plan — which is unchanged (single corpus scan, one
-                    # corpus-sized shuffle, 4 exchanges). Expected
-                    # run-to-run envelope for this query: ~4.7-10.6 s.
-                    "corpus_curation_funnel": "jvm-state variance, plan unchanged; see r8 isolated re-measure",
+                    "shared_inputs": "each *_build entry builds one registry shared input (plans/registry.py `shared`) over the inputs it uses, materialized by one eager localCheckpoint per DataFrame, median-of-3; every query that declares uses= is timed as its finalize over the last build. The registry's driver fn still builds its inputs per call",
+                    "similarity_ivfpq_index_build": "times ONLY the persisted bucketed code/centroid/codebook tables: the geometry they persist is similarity_ivfpq_geometry_build's; job-count bound at fixture scale",
+                    "similarity_pq_codebook_build": "PQ train (m=16 x 16 centroids, 2 Lloyd rounds) + full-corpus encode; similarity_pq_recall_profile then measures ADC+rerank search (plus the exact baseline it is graded against) per sample",
+                    "similarity_ivfpq_geometry_build": "IVF-PQ geometry (coarse router + per-cell sub-codebooks + code table); similarity_ivfpq_recall_profile then measures the nprobe=4/8 searches (plus the exact baseline) and similarity_ivfpq_indexed_agreement the persisted-vs-live searches per sample",
+                    "doc_langid_profile_build": "the language_profile_table classifier pass (~10 regexes per doc, the Unicode script signal), shared by doc_langid_confusion and doc_language_mix_by_source",
+                    "graph_edges_build": "the events LEAD-window edge list every uses=graph_edges query starts from",
+                    "graph_wedge_scaffold_build": "the link-prediction candidate scaffold (adjacency -> wedge self-join -> aggregate-first -> LEFT ANTI, with BOTH the AA ppm weights and the endpoint degrees); the AA/Jaccard/PA entries time their scoring select + top-k over it",
+                    "streaming_ivfpq_index_ingest": "cost = offline geometry build + per-file micro-batch appends; the drain is the tested contract. Warm sf0.1 decomposition: offline ivfpq_build 7.2s (job-count bound) + drain ~5.9s (2 batches x ~1.8s fold job-chain; trigger scheduling ~1.3s) + agreement searches ~3.5s",
+                    # Measured in isolation: clean-session solo runs at
+                    # sf0.1 took 8.2-10.6 s (median 9.4, n=5) while
+                    # in-bench medians sat near 5.8 s; the cost is the
+                    # lazily checkpointed key-table materialization job,
+                    # whose time tracks JVM warm state, not the plan
+                    # (single corpus scan, one corpus-sized shuffle).
+                    "corpus_curation_funnel": "jvm-state variance, plan unchanged; expected run-to-run envelope ~4.7-10.6 s",
                     "embeddings_principal_direction": "~2.4s = 8 power-iteration rounds of BOUNDED driver arithmetic jobs after the one corpus scatter aggregate (whose shuffle is the fixed 64x64 grid at any corpus size); scale probe 2.9x at 16x — job-count bound, not data bound",
                 },
             },
@@ -832,9 +438,7 @@ def main() -> None:
                 # No silent caps: how many registered queries the headline
                 # set does NOT time (streaming/foreachBatch fixtures and
                 # building-block queries measured inside their supersets).
-                # Counted against registry entries only — the one-shot
-                # *_build entries in `times` are bench-local, not registry
-                # queries.
+                # The *_build entries are not registry queries.
                 "n_excluded": len(QUERIES) - len([n for n in times if n in QUERIES]),
                 "detail": "BENCH_DETAIL.json",
             }

@@ -1,4 +1,4 @@
-"""Unit pins for the round-14 ADVICE fixes (ADVICE.md r13, all five):
+"""Unit pins for the round-14 ADVICE fixes (ADVICE.md r13, items 1-4):
 
 1. tokens(unicode=True, normalize=False) now raises instead of silently
    ignoring the flag.
@@ -12,8 +12,10 @@
 4. The sampled-recall oracle's import-time pin now also rejects a WHERE
    or comma-join directly after a bare `FROM documents` (the shapes
    whose textual surgery would emit invalid double-WHERE SQL).
-5. (bench.py ivfpq_fallback_trained annotation — exercised by running
-   bench, asserted structurally here.)
+
+Item 5's bench fallback flag went with the bench's factory layer; the
+shared-input graph that replaced it is pinned in
+tests/test_shared_inputs.py.
 """
 
 from __future__ import annotations
@@ -126,12 +128,3 @@ def test_recall_oracle_pin_rejects_where_and_comma_shapes():
     assert pat.search("SELECT 1 FROM documents\n  WHERE x = 1")
     assert pat.search("SELECT 1 FROM documents, other")
 
-
-def test_bench_fallback_annotation_present():
-    """ADVICE r13 item 5: bench.py records whether the ivfpq agreement
-    factory fell back to training its own geometry. Structural pin: the
-    flag key exists in the source next to the notes block, and the
-    fallback branch sets it."""
-    src = open("/root/repo/bench.py").read()
-    assert '"ivfpq_fallback_trained"' in src
-    assert '_SHARED["ivfpq_fallback_trained"] = True' in src
