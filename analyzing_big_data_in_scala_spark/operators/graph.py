@@ -12,8 +12,22 @@ A graph is just `(vertices_df, edges_df)` — edges have `src`/`dst` columns
 Scale posture: degrees are single hash aggregations; triangle counting
 canonicalizes + dedups edges first (halves the join input) and joins on
 vertex keys — AQE's skew-join handles hot vertices; the iterative loops
-shuffle once per iteration on the vertex key and checkpoint to keep the
-plan O(1) deep regardless of iteration count.
+run one aggregate per round on the vertex key and cut lineage with
+`localCheckpoint` to keep the plan O(1) deep regardless of iteration
+count.
+
+What a round costs under AQE (on for the whole session, see session.py):
+every exchange is its own job, and `localCheckpoint(eager=False)` is lazy
+only about the frame's final stage. The call itself runs every shuffle
+and broadcast stage below it, one blocking job each; the final stage runs
+inside whichever job first reads the checkpoint. The checkpointed frame
+reports `UnknownPartitioning(0)`, so a groupBy or join on the same key in
+the next round shuffles again. A loop's job count is therefore its
+exchange count, and the fixpoint loops below keep it at one aggregate per
+round plus the join side: the vertex set rides into the round's aggregate
+as a union of zero-mass rows (pagerank, personalized_pagerank), and the
+previous label comes out of the same aggregate as the new one
+(connected_components).
 """
 
 from __future__ import annotations
@@ -158,8 +172,9 @@ def pagerank(
 
     Default mode (standard-ish, GraphFrames-style damping
     EpinionsGraphFrameAnalysis.scala:93): init 1/N, out-degree counts every
-    parallel edge, vertices with no in-links keep the teleport term via a
-    left join on the full vertex set.
+    parallel edge, vertices with no in-links keep the teleport term: each
+    round's aggregate also takes one zero-mass row per vertex, so it emits
+    every vertex without a join against the vertex set.
 
     `reference_semantics=True` reproduces StandaloneScala/PageRank.scala
     exactly, including its quirks (SURVEY.md Q3-Q5):
@@ -169,8 +184,10 @@ def pagerank(
       Q5 in-links dedup parallel edges via collect_set (:33) while
          out-degree `count` (:30) does not.
 
-    Each iteration ends with `localCheckpoint()` so the logical plan stays
-    O(1) deep instead of growing linearly (SURVEY.md §4.3.2).
+    Every `checkpoint_every` iterations end with `localCheckpoint()` so the
+    logical plan stays O(1) deep instead of growing linearly (SURVEY.md
+    §4.3.2). A round is one join against the loop-invariant
+    `contrib_edges` and one aggregate.
 
     `tol`: GraphFrames-style convergence (EpinionsGraphFrameAnalysis.scala:93
     `.tol(0.01)`) — stop when max |Δrank| < tol, checked at checkpoint
@@ -179,7 +196,11 @@ def pagerank(
 
     Returns (id, pagerank).
     """
-    vertices = _vertices_from_edges(edges)
+    # The edge list feeds the vertex count and two checkpoints, each its
+    # own set of jobs; without the cut each re-derives the edges (for the
+    # events edge list, its window shuffle).
+    edges = edges.localCheckpoint(eager=False)
+    vertices = _vertices_from_edges(edges).localCheckpoint(eager=False)
     n = vertices.count()
 
     out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))  # Q5: counts parallel edges
@@ -189,44 +210,35 @@ def pagerank(
         # distinct src per dst once exploded at :48).
         flow_edges = edges.select("src", "dst").distinct()
         init_rank = 10.0  # Q3
-        join_mode = "inner"  # Q4
     else:
         flow_edges = edges.select("src", "dst")
         init_rank = 1.0 / n
-        join_mode = "left"
 
-    # Pre-join edge->out_deg once; this is loop-invariant. Lazy
-    # checkpoints (r15): one RDD shared by every iteration inside the
-    # final action — materialized on first use, no separate blocking job.
+    # Pre-join edge->out_deg once; this is loop-invariant.
     contrib_edges = flow_edges.join(out_deg, "src").localCheckpoint(eager=False)
 
-    ranks = vertices.select("id", F.lit(float(init_rank)).alias("pagerank")).localCheckpoint(eager=False)
+    ranks = vertices.select("id", F.lit(float(init_rank)).alias("pagerank"))
+    # In default mode the rank state always holds exactly the vertex set,
+    # so one (id, 0.0) row per vertex in the round's aggregate keeps the
+    # vertices without in-links (they get the teleport term alone).
+    zeros = vertices.select("id", F.lit(0.0).alias("contrib"))
 
     for i in range(max_iterations):
-        contribs = (
-            contrib_edges.join(ranks, contrib_edges.src == ranks.id, "inner")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("pagerank") / F.col("out_deg")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("mass"))
+        contribs = contrib_edges.join(ranks, contrib_edges.src == ranks.id, "inner").select(
+            F.col("dst").alias("id"),
+            (F.col("pagerank") / F.col("out_deg")).alias("contrib"),
         )
-        if join_mode == "left":
-            updated = vertices.join(contribs, "id", "left").select(
-                "id",
-                (F.lit(alpha / n) + F.lit(1 - alpha) * F.coalesce("mass", F.lit(0.0))).alias("pagerank"),
-            )
-        else:
-            # Reference formula at PageRank.scala:66 with inner-join dropout.
-            updated = contribs.select(
-                "id",
-                (F.lit(alpha / n) + F.lit(1 - alpha) * F.col("mass")).alias("pagerank"),
-            )
+        if not reference_semantics:
+            contribs = contribs.union(zeros)
+        # Reference formula at PageRank.scala:66; in reference mode the
+        # aggregate holds only vertices with in-links (Q4 inner-join dropout).
+        updated = (
+            contribs.groupBy("id")
+            .agg(F.sum("contrib").alias("mass"))
+            .select("id", (F.lit(alpha / n) + F.lit(1 - alpha) * F.col("mass")).alias("pagerank"))
+        )
         at_checkpoint = (i + 1) % checkpoint_every == 0 or (i + 1) == max_iterations
         if at_checkpoint and tol is not None:
-            # eager=False: the delta probe right below materializes the
-            # blocks in its own job (r15).
             updated = updated.localCheckpoint(eager=False)
             delta = (
                 updated.alias("u")
@@ -238,9 +250,6 @@ def pagerank(
             if delta is not None and delta < tol:
                 break
         else:
-            # eager=False: single consumer (the next iteration / the final
-            # action) — the lineage cut is what matters, not when the
-            # blocks land; eager paid one blocking job per boundary (r15).
             ranks = updated.localCheckpoint(eager=False) if at_checkpoint else updated
 
     return ranks
@@ -257,37 +266,29 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
 
     Returns (id, component) with component = min vertex id in component.
     """
-    # Lazy checkpoints (r15): each round's change count materializes the
-    # round's blocks in the same job — see connected_components_two_phase.
+    edges = edges.localCheckpoint(eager=False)  # feeds sym and the vertex set
     und = canonical_undirected(edges)
     sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).localCheckpoint(eager=False)
 
     labels = _vertices_from_edges(edges).select("id", F.col("id").alias("component")).localCheckpoint(eager=False)
+    no_label = F.lit(None).cast(labels.schema["component"].dataType)
 
     for _ in range(max_iterations):
-        nbr_min = (
+        # One aggregate per round: the neighbors' labels and the vertex's
+        # own row (which alone carries `prev`) meet in the same groupBy,
+        # so the round yields the new label and the previous one together.
+        step = (
             sym.join(labels, sym.a == labels.id)
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        updated = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    "component", F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-            )
+            .select(F.col("b").alias("id"), "component", no_label.alias("prev"))
+            .union(labels.select("id", "component", F.col("component").alias("prev")))
+            .groupBy("id")
+            .agg(F.min("component").alias("component"), F.max("prev").alias("prev"))
             .localCheckpoint(eager=False)
         )
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "id")
-            .filter(F.col("u.component") != F.col("l.component"))
-            .count()
-        )
-        labels = updated
-        if changed == 0:
+        labels = step.select("id", "component")
+        # The change check reads the checkpointed round: no join back
+        # against the previous labels.
+        if step.filter(F.col("component") != F.col("prev")).isEmpty():
             break
     return labels
 
@@ -306,10 +307,8 @@ def connected_components_two_phase(edges: DataFrame, max_iterations: int = 25) -
     Returns (id, component) — identical output contract to
     :func:`connected_components` (tested equal).
     """
-    # Lazy checkpoint (r15, guide §1/§5 job-chain cut): the first round's
-    # signature aggregate below materializes the blocks inside its own
-    # job — the old EAGER checkpoint paid a separate blocking job per
-    # round for the same blocks (2 driver syncs per round instead of 1).
+    # Lazy checkpoint: its final stage runs inside the first round's
+    # signature job rather than a job of its own (module docstring).
     e = canonical_undirected(edges).select(
         F.col("a").alias("u"), F.col("b").alias("v")
     ).localCheckpoint(eager=False)
@@ -345,8 +344,8 @@ def connected_components_two_phase(edges: DataFrame, max_iterations: int = 25) -
 
     prev_sig = None
     for _ in range(max_iterations):
-        # eager=False: the signature .first() right below both computes
-        # the round AND persists the checkpoint blocks in one job.
+        # eager=False: the round's shuffle stages run here; its final
+        # stage runs inside the signature .first() right below.
         e = small_star(large_star(e)).localCheckpoint(eager=False)
         # Overflow-safe content signature (ANSI mode: bigint sums can
         # throw): sum of 30-bit hash residues stays far below 2^63.
@@ -398,10 +397,10 @@ def bfs_hops(
         canonical_undirected(edges)
         .select(F.col("a").alias("u"), F.col("b").alias("v"))
     )
-    # Lazy checkpoints throughout this loop (r15): every frame is
-    # materialized by the round's own frontier-emptiness probe (or the
-    # next round's), so the old eager checkpoints each paid an extra
-    # blocking job per round for blocks the probe job persists anyway.
+    # Lazy checkpoints throughout this loop: each call still runs its
+    # frame's shuffle stages at once (module docstring); only the final
+    # stage waits for the round's frontier-emptiness probe (or the next
+    # round's), which persists the blocks inside its own job.
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).localCheckpoint(eager=False)
     if seeds is None:
         # Seed from the TRAVERSAL edge set (sym excludes self-loops via
@@ -459,8 +458,8 @@ def sssp_weighted(
             + 1
         )
     w_edges = und.select("a", "b", weight.cast("long").alias("w"))
-    # Lazy checkpoints (r15): the per-round emptiness probe materializes
-    # the blocks — see bfs_hops.
+    # Lazy checkpoints: the per-round emptiness probe runs their final
+    # stage — see bfs_hops.
     sym = w_edges.select(
         F.col("a").alias("u"), F.col("b").alias("v"), "w"
     ).union(
@@ -518,8 +517,8 @@ def kcore_vertices(
     if k < 1:
         raise ValueError(f"kcore_vertices: need k >= 1, got {k}")
     und = canonical_undirected(edges)
-    # Lazy checkpoints (r15): each round's convergence count materializes
-    # the blocks in the same job — see bfs_hops.
+    # Lazy checkpoints: each round's convergence count runs their final
+    # stage — see bfs_hops.
     cur = (
         und.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .union(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -576,11 +575,11 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     unrolled-CTE oracle re-derive it value-for-value (the pagerank
     precedent applied to community detection).
 
-    Scale shape per round: ONE equi-join (undirected edges x labels, both
-    hash-partitioned on the join key) + two hash aggregates — the
-    (id, label) count and the per-id argmax via min_by over a
-    (-count, label) struct (total order, no window, map-side partials).
-    Labels are lineage-cut per round like the pagerank loop."""
+    Scale shape per round: ONE equi-join (undirected edges x labels) + ONE
+    aggregate on id, so one exchange: `mode(label, deterministic=True)` is
+    the most frequent neighbor label with ties to the smallest, with
+    map-side partials (no window, no second (id, label) count exchange).
+    Labels are lineage-cut every 2 rounds like the pagerank loop."""
     und = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -598,13 +597,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
         nbr = und.join(
             labels.select(F.col("id").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("id"), "label")
-        counts = nbr.groupBy("id", "label").agg(F.count("*").alias("n"))
-        labels = counts.groupBy("id").agg(
-            F.min_by(
-                "label",
-                F.struct((-F.col("n")).alias("nn"), F.col("label").alias("lb")),
-            ).alias("label")
-        )
+        labels = nbr.groupBy("id").agg(F.mode("label", deterministic=True).alias("label"))
         # Lineage cut every 2 rounds (r15 — the pagerank/hits/ppr cadence
         # dial, see tools/graph_cadence_probe.py): mid-loop labels is
         # single-consumer, so the cut is plan-depth control only.
@@ -632,14 +625,13 @@ def personalized_pagerank(
     localCheckpoint lineage cuts, loop-invariant out-degree join); init
     r0 = the teleport vector itself. Deterministic for a fixed seed set,
     so the whole fixpoint value-checks against an unrolled-CTE oracle."""
+    edges = edges.localCheckpoint(eager=False)  # feeds out_deg, flow and tele
     vertices = _vertices_from_edges(edges)
     seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
     n_seeds = seed_ids.count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank: empty seed set")
     out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # Lazy checkpoints (r15): both frames are single RDDs shared by every
-    # iteration of the final action — materialized on first use.
     contrib_edges = edges.select("src", "dst").join(out_deg, "src").localCheckpoint(eager=False)
     # Teleport vector: 1/|S| on seeds, 0 elsewhere — also the init.
     tele = vertices.join(
@@ -651,22 +643,24 @@ def personalized_pagerank(
         .alias("tele"),
     ).localCheckpoint(eager=False)
     ranks = tele.select("id", F.col("tele").alias("ppr"))
+    # One (id, tele, 0.0) row per vertex joins each round's aggregate, so
+    # every vertex keeps its teleport term without a per-round join
+    # against `tele` (the pagerank union).
+    tele_rows = tele.select("id", "tele", F.lit(0.0).alias("contrib"))
     for i in range(iterations):
-        contribs = (
-            contrib_edges.join(ranks, contrib_edges.src == ranks.id, "inner")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("ppr") / F.col("out_deg")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("mass"))
+        contribs = contrib_edges.join(ranks, contrib_edges.src == ranks.id, "inner").select(
+            F.col("dst").alias("id"),
+            F.lit(0.0).alias("tele"),
+            (F.col("ppr") / F.col("out_deg")).alias("contrib"),
         )
-        ranks = tele.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.lit(alpha) * F.col("tele")
-                + F.lit(1 - alpha) * F.coalesce("mass", F.lit(0.0))
-            ).alias("ppr"),
+        ranks = (
+            contribs.union(tele_rows)
+            .groupBy("id")
+            .agg(F.sum("tele").alias("tele"), F.sum("contrib").alias("mass"))
+            .select(
+                "id",
+                (F.lit(alpha) * F.col("tele") + F.lit(1 - alpha) * F.col("mass")).alias("ppr"),
+            )
         )
         # Lineage cut every 2 rounds (r15 — the pagerank checkpoint_every
         # dial): mid-loop ranks is single-consumer, so the cut is pure

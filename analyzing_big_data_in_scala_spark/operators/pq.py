@@ -141,28 +141,23 @@ def _assign(
             c["centroid_id"].alias("_cid"),
         ),
     )
+    # The fold's init carries the first (smallest) centroid_id, so a
+    # subvector whose distances are all NaN or NULL keeps that code rather
+    # than a NULL one that inner joins would drop silently. Only the id is
+    # seeded, not the first struct itself: `dists` sits under a
+    # higher-order function, where subexpression elimination does not
+    # reach, so reading dists[0] would compute every L2 a second time.
+    # Each _cbs array is non-empty by construction (collect_list over >= 1
+    # row per sub group), and an empty codebook yields zero rows from the
+    # inner join on "sub".
     best = F.aggregate(
         dists,
         F.struct(
             F.lit(float("inf")).alias("_d"),
-            F.lit(None).cast(centroids.schema["centroid_id"].dataType).alias("_cid"),
+            F.col("_cbs")[0]["centroid_id"].alias("_cid"),
         ),
         lambda acc, x: F.when(x["_d"] < acc["_d"], x).otherwise(acc),
     )
-    # No null-code guard needed: the inner join on "sub" already yields
-    # zero rows for an empty codebook, and each _cbs array is non-empty
-    # by construction (collect_list over >=1 row per sub group), so the
-    # fold always leaves the init struct. A post-hoc filter would also
-    # risk re-evaluating the fold (filter-through-project substitution +
-    # the r3 conditional-CSE exclusion).
-    #
-    # ADVICE r14 caveat: a NULL/NaN L2 distance (a malformed or NaN
-    # subvector — unreachable from the int8-quantized pipelines in this
-    # repo) fails the strict `<` on every element, leaving code=NULL;
-    # downstream inner joins on `code` then drop that row SILENTLY where
-    # r13's min(struct) always emitted some code. Debug recipe if a
-    # non-quantized caller ever feeds this: assert
-    # `assigned.filter("code IS NULL").isEmpty()` at the call site.
     keep = ["subv"] if keep_subv else []
     return joined.select(*id_cols, "sub", *keep, best["_cid"].alias("code"))
 

@@ -9,6 +9,15 @@ factory and bake in the scale posture the reference lacks:
 - shuffle partitions sized from the env (local[32] test box -> 32; a real
   cluster overrides via SPARK_GRAFT_CPUS or spark-defaults).
 - Arrow enabled for the few pandas-UDF paths (multimodal stubs).
+- A generated-code cache that holds a whole workload. Spark caches the
+  classes whole-stage codegen compiles in a static cache of
+  `spark.sql.codegen.cache.maxEntries` entries (default 100). One pass of
+  the graph fixpoint queries needs ~150 distinct classes, so with the
+  default every warm pass evicted and recompiled ~100 of them; 2000 holds
+  it. `spark.sql.codegen.useIdInClassName=false` drops the stage id from
+  generated class names, so the same code body produced under a new stage
+  id is a cache hit rather than a new class. Both are static confs: they
+  take effect only on the session that starts the JVM.
 """
 
 from __future__ import annotations
@@ -38,6 +47,8 @@ def get_spark(app_name: str = "abds-spark", shuffle_partitions: int | None = Non
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

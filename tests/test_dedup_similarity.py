@@ -950,6 +950,47 @@ def test_pq_codes_and_adc_match_numpy_exactly(spark):
         assert [(vid, sc) for _, vid, sc in got] == want
 
 
+def test_pq_assign_nan_subvector_keeps_a_code(spark):
+    """_assign equals a numpy argmin (ties to the smallest centroid_id,
+    NaN distances ranked above every number) on integer-valued subvectors
+    that include an all-NaN one and a partly-NaN one: every
+    (vector, subspace) keeps a non-NULL code, so no row is lost to an
+    inner join on `code`."""
+    import numpy as np
+
+    from analyzing_big_data_in_scala_spark.operators import pq as PQ
+
+    nan = float("nan")
+    cents = {
+        (0, 0): [0.0, 0.0], (0, 1): [2.0, 2.0], (0, 2): [-3.0, 1.0],
+        (1, 0): [1.0, 1.0], (1, 1): [1.0, -1.0],
+    }
+    subvs = {
+        (1, 0): [1.0, 1.0],    # tie between centroids 0 and 1 -> 0
+        (1, 1): [1.0, -2.0],
+        (2, 0): [nan, nan],    # every distance NaN
+        (2, 1): [nan, 0.0],
+        (3, 0): [-2.0, 2.0],
+        (3, 1): [5.0, 5.0],
+    }
+    cdf = spark.createDataFrame(
+        [(s, c, v) for (s, c), v in cents.items()],
+        "sub int, centroid_id int, centroid array<double>",
+    )
+    sdf = spark.createDataFrame(
+        [(i, s, v) for (i, s), v in subvs.items()],
+        "vec_id long, sub int, subv array<double>",
+    )
+    got = {(r.vec_id, r.sub): r.code for r in PQ._assign(sdf, cdf, "vec_id").collect()}
+
+    want = {}
+    for (i, s), v in subvs.items():
+        ids = sorted(c for (cs, c) in cents if cs == s)
+        d = np.array([((np.array(v) - np.array(cents[(s, c)])) ** 2).sum() for c in ids])
+        want[(i, s)] = ids[int(np.argmin(np.where(np.isnan(d), np.inf, d)))]
+    assert got == want
+
+
 def test_pq_rerank_recall_and_code_compression(spark):
     """The two-stage search (codes-only ADC pool-50 shortlist -> exact
     quantized-cosine rerank) recovers >= 90% of the exact cosine top-10 on

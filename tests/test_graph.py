@@ -339,3 +339,125 @@ def test_adamic_adar_center_degree_cap(spark):
                 for r in adamic_adar_topk(
                     edges, k=100, max_center_degree=10).collect()}
     assert wide_cap == uncapped
+
+
+# Brute-force differentials: one small graph with every edge case the
+# fixpoint loops special-case. Vertex 5 has no in-links, 4 is dangling (no
+# out-links), 1->2 is a parallel edge, 2->2 and 10->10 are self-loops (10
+# has no other edge), and 7-8-9 is a second component.
+DIFF_EDGES = [
+    (5, 1), (1, 2), (1, 2), (2, 2), (2, 3), (3, 1), (3, 4),
+    (7, 8), (9, 8), (10, 10),
+]
+
+
+def _power_iteration(edges, iterations, alpha, init, tele=None, reference=False):
+    """Pure-Python PageRank rounds with the operators' semantics: out-degree
+    counts every parallel edge; default mode keeps every vertex and flows
+    over every edge, reference mode (Q3-Q5) flows over distinct edges and
+    keeps only vertices reached by an inner join; `tele` switches to the
+    personalized teleport (alpha * tele(v) in place of alpha / n)."""
+    vertices = {v for e in edges for v in e}
+    n = len(vertices)
+    out_deg: dict[int, int] = {}
+    for s, _ in edges:
+        out_deg[s] = out_deg.get(s, 0) + 1
+    flow = sorted(set(edges)) if reference else edges
+    ranks = {v: init(v) for v in vertices}
+    for _ in range(iterations):
+        mass: dict[int, float] = {}
+        for s, d in flow:
+            if s in ranks:
+                mass[d] = mass.get(d, 0.0) + ranks[s] / out_deg[s]
+        keep = mass if reference else vertices
+        if tele is None:
+            ranks = {v: alpha / n + (1 - alpha) * mass.get(v, 0.0) for v in keep}
+        else:
+            ranks = {v: alpha * tele(v) + (1 - alpha) * mass.get(v, 0.0) for v in keep}
+    return ranks
+
+
+@pytest.mark.parametrize("reference", [False, True])
+def test_pagerank_equals_power_iteration(spark, reference):
+    edges = spark.createDataFrame(DIFF_EDGES, "src long, dst long")
+    n = len({v for e in DIFF_EDGES for v in e})
+    init = (lambda v: 10.0) if reference else (lambda v: 1.0 / n)
+    want = _power_iteration(DIFF_EDGES, 7, 0.15, init, reference=reference)
+    got = {
+        r.id: r.pagerank
+        for r in G.pagerank(
+            edges, alpha=0.15, max_iterations=7, reference_semantics=reference
+        ).collect()
+    }
+    assert set(got) == set(want)
+    for v, rank in want.items():
+        assert got[v] == pytest.approx(rank, abs=1e-9), v
+
+
+def test_personalized_pagerank_equals_power_iteration(spark):
+    edges = spark.createDataFrame(DIFF_EDGES, "src long, dst long")
+    seeds = {4, 5}
+
+    def tele(v):
+        return 1.0 / len(seeds) if v in seeds else 0.0
+
+    want = _power_iteration(DIFF_EDGES, 7, 0.15, tele, tele=tele)
+    seed_df = spark.createDataFrame([(s,) for s in sorted(seeds)], "id long")
+    got = {
+        r.id: r.ppr
+        for r in G.personalized_pagerank(edges, seed_df, alpha=0.15, iterations=7).collect()
+    }
+    assert set(got) == set(want)
+    for v, rank in want.items():
+        assert got[v] == pytest.approx(rank, abs=1e-9), v
+
+
+def test_connected_components_equals_union_find(spark):
+    parent = {v: v for e in DIFF_EDGES for v in e}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in DIFF_EDGES:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root is the component's min id
+    want = {v: find(v) for v in parent}
+    edges = spark.createDataFrame(DIFF_EDGES, "src long, dst long")
+    got = {r.id: r.component for r in G.connected_components(edges).collect()}
+    assert got == want
+
+
+# Jobs per registry call (call + a noop write) on the sf0.001 fixtures. The
+# fixpoint loops are bound by their job chain: under AQE every exchange is
+# its own job, so each bound below is the count the one-aggregate-per-round
+# loops run. A per-round join added back raises the count by one job or
+# more per round and fails here.
+MAX_JOBS_PER_CALL = {
+    "graph_pagerank": 24,
+    "graph_component_sizes": 12,
+    "graph_label_propagation": 12,
+}
+
+
+def test_fixpoint_queries_job_counts(spark):
+    from analyzing_big_data_in_scala_spark.plans import QUERIES
+
+    from .conftest import SF_SMALL
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    got = {}
+    for name in MAX_JOBS_PER_CALL:
+        before = int(dag.nextJobId())
+        QUERIES[name].fn(spark, SF_SMALL).write.format("noop").mode("overwrite").save()
+        got[name] = int(dag.nextJobId()) - before
+    assert all(got[q] <= MAX_JOBS_PER_CALL[q] for q in got), got
+
+
+def test_get_spark_sizes_the_codegen_cache(spark):
+    # One warm pass of the fixpoint queries needs ~150 generated classes;
+    # Spark's default cache holds 100, so a smaller cache recompiles them.
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
