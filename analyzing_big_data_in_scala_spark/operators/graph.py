@@ -25,14 +25,14 @@ reports `UnknownPartitioning(0)`, so a groupBy or join on the same key in
 the next round shuffles again. A loop's job count is therefore its
 exchange count, and the fixpoint loops below keep it at one aggregate per
 round plus the join side: the vertex set rides into the round's aggregate
-as a union of zero-mass rows (pagerank, personalized_pagerank), and the
-previous label comes out of the same aggregate as the new one
+as a union of zero-mass rows (`_rank_rounds`, the one PageRank loop), and
+the previous label comes out of the same aggregate as the new one
 (connected_components).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -160,21 +160,82 @@ def _vertices_from_edges(edges: DataFrame) -> DataFrame:
     )
 
 
+# Lineage-cut cadence of the rank, label and HITS loops: cut after every
+# `_LINEAGE_CUT_EVERY`-th round and after the last. The frames cut there
+# have one consumer, so the cut only bounds plan depth; every second round
+# persists half the block sets for bit-identical values (OPTIMIZATION_r15.md
+# §3b, sf0.1 warm: personalized_pagerank 2.92 -> 2.53 s, hits 4.09 -> 3.33 s).
+_LINEAGE_CUT_EVERY = 2
+
+
+def _cut_after(i: int, rounds: int) -> bool:
+    return (i + 1) % _LINEAGE_CUT_EVERY == 0 or (i + 1) == rounds
+
+
+def _rank_rounds(
+    edges: DataFrame,
+    flow: DataFrame,
+    ranks: DataFrame,
+    rows: DataFrame | None,
+    teleport: Column,
+    alpha: float,
+    rounds: int,
+    tol: float | None = None,
+) -> DataFrame:
+    """The PageRank power iteration of :func:`pagerank` and
+    :func:`personalized_pagerank`:
+
+        rank(v) = teleport + (1 - alpha) * Σ_{u→v over flow} rank(u) / out_deg(u)
+
+    One round is one join of `ranks` (id, rank) against the loop-invariant
+    (src, dst, out_deg) edges and one aggregate on `id`; `out_deg` counts
+    every edge of `edges`, parallel ones included (Q5). `rows` are unioned
+    by name into every round's aggregate: an (id, contrib=0.0) row per
+    vertex keeps the vertices without in-links, and a column they add
+    (`tele`) is there for `teleport`, an aggregate Column. With no rows a
+    vertex drops out once no rank flows into it (Q4). `tol` stops at a
+    lineage cut once max |Δrank| < tol (one 1-row aggregate on the
+    materialized ranks). Returns (id, rank)."""
+    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+    contrib_edges = flow.join(out_deg, "src").localCheckpoint(eager=False)
+    for i in range(rounds):
+        contribs = contrib_edges.join(ranks, contrib_edges.src == ranks.id, "inner").select(
+            F.col("dst").alias("id"),
+            (F.col("rank") / F.col("out_deg")).alias("contrib"),
+        )
+        if rows is not None:
+            contribs = contribs.unionByName(rows, allowMissingColumns=True)
+        updated = contribs.groupBy("id").agg(
+            (teleport + F.lit(1 - alpha) * F.sum("contrib")).alias("rank")
+        )
+        if not _cut_after(i, rounds):
+            ranks = updated
+            continue
+        updated = updated.localCheckpoint(eager=False)
+        if tol is not None:
+            delta = (
+                updated.join(ranks.select("id", F.col("rank").alias("prev")), "id", "left")
+                .agg(F.max(F.abs(F.col("rank") - F.coalesce("prev", F.lit(0.0)))).alias("d"))
+                .first()["d"]
+            )
+            if delta is not None and delta < tol:
+                return updated
+        ranks = updated
+    return ranks
+
+
 def pagerank(
     edges: DataFrame,
     alpha: float = 0.15,
     max_iterations: int = 10,
     reference_semantics: bool = False,
-    checkpoint_every: int = 2,
     tol: float | None = None,
 ) -> DataFrame:
-    """Iterative PageRank as a DataFrame fixpoint loop.
+    """Iterative PageRank (the rounds are :func:`_rank_rounds`).
 
-    Default mode (standard-ish, GraphFrames-style damping
-    EpinionsGraphFrameAnalysis.scala:93): init 1/N, out-degree counts every
-    parallel edge, vertices with no in-links keep the teleport term: each
-    round's aggregate also takes one zero-mass row per vertex, so it emits
-    every vertex without a join against the vertex set.
+    Default mode (GraphFrames-style damping,
+    EpinionsGraphFrameAnalysis.scala:93): init 1/N, mass flows over every
+    edge, and every vertex keeps at least the teleport term alpha/N.
 
     `reference_semantics=True` reproduces StandaloneScala/PageRank.scala
     exactly, including its quirks (SURVEY.md Q3-Q5):
@@ -184,75 +245,27 @@ def pagerank(
       Q5 in-links dedup parallel edges via collect_set (:33) while
          out-degree `count` (:30) does not.
 
-    Every `checkpoint_every` iterations end with `localCheckpoint()` so the
-    logical plan stays O(1) deep instead of growing linearly (SURVEY.md
-    §4.3.2). A round is one join against the loop-invariant
-    `contrib_edges` and one aggregate.
-
     `tol`: GraphFrames-style convergence (EpinionsGraphFrameAnalysis.scala:93
-    `.tol(0.01)`) — stop when max |Δrank| < tol, checked at checkpoint
-    boundaries (the rank frame is materialized there anyway, so the check
-    costs one cheap max-aggregate, not an extra pass).
+    `.tol(0.01)`): stop when max |Δrank| < tol, checked at lineage cuts.
 
     Returns (id, pagerank).
     """
-    # The edge list feeds the vertex count and two checkpoints, each its
-    # own set of jobs; without the cut each re-derives the edges (for the
-    # events edge list, its window shuffle).
+    # The edge list feeds the vertex set, the out-degrees and the flow;
+    # without the cut each re-derives the edges (for the events edge list,
+    # its window shuffle).
     edges = edges.localCheckpoint(eager=False)
     vertices = _vertices_from_edges(edges).localCheckpoint(eager=False)
     n = vertices.count()
-
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))  # Q5: counts parallel edges
-
     if reference_semantics:
-        # Q5: contributions flow over DEDUPED edges (collect_set at :33 ==
-        # distinct src per dst once exploded at :48).
-        flow_edges = edges.select("src", "dst").distinct()
-        init_rank = 10.0  # Q3
+        # Q5: flow over DEDUPED edges (collect_set at :33 == distinct src
+        # per dst once exploded at :48); Q3 init; Q4 no per-vertex rows.
+        flow, init_rank, rows = edges.select("src", "dst").distinct(), 10.0, None
     else:
-        flow_edges = edges.select("src", "dst")
-        init_rank = 1.0 / n
-
-    # Pre-join edge->out_deg once; this is loop-invariant.
-    contrib_edges = flow_edges.join(out_deg, "src").localCheckpoint(eager=False)
-
-    ranks = vertices.select("id", F.lit(float(init_rank)).alias("pagerank"))
-    # In default mode the rank state always holds exactly the vertex set,
-    # so one (id, 0.0) row per vertex in the round's aggregate keeps the
-    # vertices without in-links (they get the teleport term alone).
-    zeros = vertices.select("id", F.lit(0.0).alias("contrib"))
-
-    for i in range(max_iterations):
-        contribs = contrib_edges.join(ranks, contrib_edges.src == ranks.id, "inner").select(
-            F.col("dst").alias("id"),
-            (F.col("pagerank") / F.col("out_deg")).alias("contrib"),
-        )
-        if not reference_semantics:
-            contribs = contribs.union(zeros)
-        # Reference formula at PageRank.scala:66; in reference mode the
-        # aggregate holds only vertices with in-links (Q4 inner-join dropout).
-        updated = (
-            contribs.groupBy("id")
-            .agg(F.sum("contrib").alias("mass"))
-            .select("id", (F.lit(alpha / n) + F.lit(1 - alpha) * F.col("mass")).alias("pagerank"))
-        )
-        at_checkpoint = (i + 1) % checkpoint_every == 0 or (i + 1) == max_iterations
-        if at_checkpoint and tol is not None:
-            updated = updated.localCheckpoint(eager=False)
-            delta = (
-                updated.alias("u")
-                .join(ranks.select("id", F.col("pagerank").alias("prev")), "id", "left")
-                .agg(F.max(F.abs(F.col("pagerank") - F.coalesce("prev", F.lit(0.0)))).alias("d"))
-                .first()["d"]
-            )
-            ranks = updated
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = updated.localCheckpoint(eager=False) if at_checkpoint else updated
-
-    return ranks
+        flow, init_rank = edges.select("src", "dst"), 1.0 / n
+        rows = vertices.select("id", F.lit(0.0).alias("contrib"))
+    init = vertices.select("id", F.lit(float(init_rank)).alias("rank"))
+    ranks = _rank_rounds(edges, flow, init, rows, F.lit(alpha / n), alpha, max_iterations, tol)
+    return ranks.withColumnRenamed("rank", "pagerank")
 
 
 def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
@@ -579,7 +592,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     aggregate on id, so one exchange: `mode(label, deterministic=True)` is
     the most frequent neighbor label with ties to the smallest, with
     map-side partials (no window, no second (id, label) count exchange).
-    Labels are lineage-cut every 2 rounds like the pagerank loop."""
+    Labels are lineage-cut at the module's `_LINEAGE_CUT_EVERY` cadence."""
     und = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -598,10 +611,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
             labels.select(F.col("id").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("id"), "label")
         labels = nbr.groupBy("id").agg(F.mode("label", deterministic=True).alias("label"))
-        # Lineage cut every 2 rounds (r15 — the pagerank/hits/ppr cadence
-        # dial, see tools/graph_cadence_probe.py): mid-loop labels is
-        # single-consumer, so the cut is plan-depth control only.
-        if (i + 1) % 2 == 0 or (i + 1) == rounds:
+        if _cut_after(i, rounds):
             labels = labels.localCheckpoint(eager=False)
     return labels
 
@@ -621,59 +631,37 @@ def personalized_pagerank(
     (non-seeds reachable only via teleport score 0 — kept, because "has
     zero trust" is the signal).
 
-    Same loop discipline as :func:`pagerank` (fixed iterations,
-    localCheckpoint lineage cuts, loop-invariant out-degree join); init
-    r0 = the teleport vector itself. Deterministic for a fixed seed set,
+    The rounds are :func:`_rank_rounds` with the teleport vector
+    tele = 1/|S| on the seeds that are vertices of the graph, 0 elsewhere,
+    as the init and as each round's teleport term alpha * tele. Seed ids
+    outside the graph are ignored. Deterministic for a fixed seed set,
     so the whole fixpoint value-checks against an unrolled-CTE oracle."""
-    edges = edges.localCheckpoint(eager=False)  # feeds out_deg, flow and tele
-    vertices = _vertices_from_edges(edges)
-    seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
-    n_seeds = seed_ids.count()
+    edges = edges.localCheckpoint(eager=False)  # feeds the vertex set, out_deg and flow
+    # The seeds are flagged on the vertex set once and counted from that
+    # checkpoint, so the seed frame is derived once.
+    flagged = (
+        _vertices_from_edges(edges)
+        .join(
+            seeds.select(F.col(seeds.columns[0]).alias("id"), F.lit(True).alias("seed")).distinct(),
+            "id",
+            "left",
+        )
+        .select("id", F.col("seed").isNotNull().alias("seed"))
+        .localCheckpoint(eager=False)
+    )
+    n_seeds = flagged.filter("seed").count()
     if n_seeds == 0:
-        raise ValueError("personalized_pagerank: empty seed set")
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    contrib_edges = edges.select("src", "dst").join(out_deg, "src").localCheckpoint(eager=False)
-    # Teleport vector: 1/|S| on seeds, 0 elsewhere — also the init.
-    tele = vertices.join(
-        seed_ids.withColumn("_s", F.lit(1)), "id", "left"
-    ).select(
-        "id",
-        F.when(F.col("_s").isNotNull(), F.lit(1.0 / n_seeds))
-        .otherwise(F.lit(0.0))
-        .alias("tele"),
-    ).localCheckpoint(eager=False)
-    ranks = tele.select("id", F.col("tele").alias("ppr"))
-    # One (id, tele, 0.0) row per vertex joins each round's aggregate, so
-    # every vertex keeps its teleport term without a per-round join
-    # against `tele` (the pagerank union).
-    tele_rows = tele.select("id", "tele", F.lit(0.0).alias("contrib"))
-    for i in range(iterations):
-        contribs = contrib_edges.join(ranks, contrib_edges.src == ranks.id, "inner").select(
-            F.col("dst").alias("id"),
-            F.lit(0.0).alias("tele"),
-            (F.col("ppr") / F.col("out_deg")).alias("contrib"),
-        )
-        ranks = (
-            contribs.union(tele_rows)
-            .groupBy("id")
-            .agg(F.sum("tele").alias("tele"), F.sum("contrib").alias("mass"))
-            .select(
-                "id",
-                (F.lit(alpha) * F.col("tele") + F.lit(1 - alpha) * F.col("mass")).alias("ppr"),
-            )
-        )
-        # Lineage cut every 2 rounds (r15 — the pagerank checkpoint_every
-        # dial): mid-loop ranks is single-consumer, so the cut is pure
-        # plan-depth control; halving the persisted block sets measured
-        # 2.92 s -> 2.53 s (tools/graph_cadence_probe.py, bit-identical).
-        if (i + 1) % 2 == 0 or (i + 1) == iterations:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+        raise ValueError("personalized_pagerank: no seed is a vertex of the graph")
+    tele = flagged.select(
+        "id", F.when(F.col("seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("tele")
+    )
+    init, rows = tele.select("id", F.col("tele").alias("rank")), tele.withColumn("contrib", F.lit(0.0))
+    teleport = F.lit(alpha) * F.sum("tele")
+    ranks = _rank_rounds(edges, edges.select("src", "dst"), init, rows, teleport, alpha, iterations)
+    return ranks.withColumnRenamed("rank", "ppr")
 
 
-def hits(
-    edges: DataFrame, iterations: int = 8, checkpoint_every: int = 2
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999), fixed-iteration power
     method with L2 normalization each half-step:
 
@@ -682,22 +670,13 @@ def hits(
 
     Returns (id, auth, hub) for EVERY vertex (vertices with no in-links
     have auth 0, no out-links hub 0 — kept, absence of endorsement is the
-    signal). Same loop discipline as :func:`pagerank`: fixed iterations
-    (deterministic → value-checkable by an unrolled-CTE oracle), lazy
-    `localCheckpoint` lineage cuts on every frame consumed twice (the
-    edge list feeds both half-steps; each raw half-step sum feeds its
-    L2 norm AND the divide — without the cut each consumer re-runs the
-    whole upstream chain). Each half-step is one equi-join + one hash
-    aggregate; the L2 norm is a 1-row aggregate broadcast back —
-    nothing is collected to the driver.
-
-    ``checkpoint_every`` (r15, the same dial as :func:`pagerank`):
-    mid-loop auth/hub are SINGLE-consumer frames, so their lineage cut
-    is plan-depth control, not dedup — cutting every 2 iterations
-    persists half the corpus-scale block sets for identical values
-    (checkpoints never change results; interleaved warm A/B in
-    tools/graph_cadence_probe.py: 4.09 s → 3.33 s at sf0.1,
-    bit-identical output).
+    signal). Fixed iterations, so the result is deterministic and
+    value-checkable by an unrolled-CTE oracle. Each half-step is one
+    equi-join + one hash aggregate; the L2 norm is a 1-row aggregate
+    broadcast back, so nothing is collected to the driver. Each raw
+    half-step sum feeds its norm AND the divide, so it is lineage-cut every
+    half-step; auth and hub are cut at the module's `_LINEAGE_CUT_EVERY`
+    cadence.
     """
     if iterations < 1:
         raise ValueError("hits: iterations must be >= 1")
@@ -744,9 +723,7 @@ def hits(
                 F.try_divide("s", "n").alias("hub"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 or (i + 1) == iterations:
-            # auth is consumed by the hub step AND (on the last round)
-            # the output; the cadence cut keeps plan depth constant.
+        if _cut_after(i, iterations):
             auth = auth.localCheckpoint(eager=False)
             hub = hub.localCheckpoint(eager=False)
     return (

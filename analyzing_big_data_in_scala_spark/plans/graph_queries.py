@@ -433,7 +433,7 @@ def _lpa_sql(rounds: int = 4) -> str:
     "graph_label_propagation",
     uses=("graph_edges",),
     oracle=_lpa_sql(rounds=4),
-    description="Synchronous label-propagation community detection, 4 fixed rounds (GraphFrames labelPropagation counterpart): per round one edges-x-labels equi-join + per-vertex (count desc, label asc) argmax via min_by — deterministic, value-checked against a 4-round unrolled MATERIALIZED-CTE oracle (operators/graph.py)",
+    description="Synchronous label-propagation community detection, 4 fixed rounds (GraphFrames labelPropagation counterpart): per round one edges-x-labels equi-join + one per-vertex mode(label) aggregate (most frequent label, ties to the smallest) — deterministic, value-checked against a 4-round unrolled MATERIALIZED-CTE oracle (operators/graph.py)",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str, graph_edges: DataFrame) -> DataFrame:
     return G.label_propagation(graph_edges, rounds=4)

@@ -123,7 +123,9 @@ def epinions_graph_analysis(
     """StandaloneScala/EpinionsGraphFrameAnalysis.scala end-to-end: the five
     top-5 analyses over a directed edge list (:64-131), each optionally
     written to CSV like the reference (:71-75 etc., sink S9)."""
-    edges = edges.cache()
+    # Five analyses read the edges; a lazy localCheckpoint computes them
+    # once and, unlike .cache(), is reclaimed with the DataFrame.
+    edges = edges.localCheckpoint(eager=False)
     pr = G.pagerank(edges, alpha=0.15, max_iterations=10)
     comps = G.connected_components(edges)
     results = {
@@ -141,44 +143,22 @@ def epinions_graph_analysis(
 
 def airport_pagerank(flights: DataFrame, max_iterations: int) -> DataFrame:
     """StandaloneScala/PageRank.scala end-to-end with quirks Q3-Q5 intact:
-    out-degree counts every flight (:30), in-links dedup via collect_set
-    (:33), full outer join on (id, code) (:36), init rank 10.0 (:17,42),
-    inner-join update loop (:45-67) that drops airports without in-links.
+    `graph.pagerank(reference_semantics=True)` over the airport-id edges
+    (out-degree counts every flight, in-links dedup, init 10.0, inner-join
+    dropout of airports without in-links), then joined to the airport codes.
     flights: (ORIGIN_AIRPORT_ID, ORIGIN, DEST_AIRPORT_ID, DEST).
-    Returns (code, pageRank) descending — but with localCheckpoint per
-    iteration instead of the reference's unbounded lineage (§4.3.2)."""
-    alpha, init_pr = 0.15, 10.0
-    out_link = flights.groupBy(
-        F.col("ORIGIN_AIRPORT_ID").alias("id"), F.col("ORIGIN").alias("code")
-    ).agg(F.count("*").alias("outLink"))
-    in_link = flights.groupBy(
-        F.col("DEST_AIRPORT_ID").alias("id"), F.col("DEST").alias("code")
-    ).agg(F.collect_set("ORIGIN_AIRPORT_ID").alias("inLinkList"))
-    base = out_link.join(in_link, ["id", "code"], "full").cache()
-    n = base.count()
-
-    ranks = base.select("id", "code", F.lit(init_pr).alias("pageRank")).localCheckpoint()
-    contrib_src = base.select(
-        F.col("id").alias("inLink_id"), F.col("outLink").alias("inLink_outLink")
+    Returns (code, pageRank) descending."""
+    edges = flights.select(
+        F.col("ORIGIN_AIRPORT_ID").alias("src"), F.col("DEST_AIRPORT_ID").alias("dst")
     )
-    exploded = base.select("id", F.explode("inLinkList").alias("inLink_id")).localCheckpoint()
-    for _ in range(max_iterations):
-        contribs = (
-            exploded.join(contrib_src, "inLink_id")
-            .join(ranks.select(F.col("id").alias("inLink_id"), "pageRank"), "inLink_id")
-            .groupBy("id")
-            .agg(F.sum(F.col("pageRank") / F.col("inLink_outLink")).alias("sum"))
-        )
-        ranks = (
-            contribs.join(ranks.select("id", "code"), "id")
-            .select(
-                "id",
-                "code",
-                (F.lit(alpha / n) + F.lit(1 - alpha) * F.col("sum")).alias("pageRank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("code", "pageRank").orderBy(F.desc("pageRank"), F.asc("code"))
+    # Q4 keeps only airports with in-links, so the DEST side has every code.
+    codes = flights.select(F.col("DEST_AIRPORT_ID").alias("id"), F.col("DEST").alias("code")).distinct()
+    return (
+        G.pagerank(edges, alpha=0.15, max_iterations=max_iterations, reference_semantics=True)
+        .join(codes, "id")
+        .select("code", F.col("pagerank").alias("pageRank"))
+        .orderBy(F.desc("pageRank"), F.asc("code"))
+    )
 
 
 def streaming_sentiment_feed(spark: SparkSession, sf_dir: str, sink: list) -> None:

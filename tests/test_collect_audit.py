@@ -52,7 +52,7 @@ ALLOWED: dict[tuple[str, str], str] = {
         "1-row aggregate (sum of removed tokens) steering the bounded "
         "fixpoint loop"
     ),
-    ("operators/graph.py", "pagerank"): (
+    ("operators/graph.py", "_rank_rounds"): (
         "1-row max-delta aggregate per iteration (tolerance-mode stop "
         "condition)"
     ),

@@ -119,20 +119,21 @@ def test_epinions_graph_analysis_end_to_end(spark, corpus_files, tmp_path):
     assert back.count() == len(results["out_degrees"].collect())
 
 
+FLIGHTS = [
+    ("10", "AAA", "20", "BBB"),
+    ("20", "BBB", "30", "CCC"),
+    ("30", "CCC", "10", "AAA"),
+    ("10", "AAA", "30", "CCC"),
+    ("10", "AAA", "30", "CCC"),  # parallel flight (Q5)
+]
+FLIGHTS_SCHEMA = "ORIGIN_AIRPORT_ID string, ORIGIN string, DEST_AIRPORT_ID string, DEST string"
+
+
 def test_airport_pagerank_matches_reference_mode_operator(spark):
     """Differential test: the faithful PageRank.scala workload must produce
     the same numbers as graph.pagerank(reference_semantics=True) on the
     equivalent edge list (both implement quirks Q3-Q5)."""
-    flights = spark.createDataFrame(
-        [
-            ("10", "AAA", "20", "BBB"),
-            ("20", "BBB", "30", "CCC"),
-            ("30", "CCC", "10", "AAA"),
-            ("10", "AAA", "30", "CCC"),
-            ("10", "AAA", "30", "CCC"),  # parallel flight (Q5)
-        ],
-        "ORIGIN_AIRPORT_ID string, ORIGIN string, DEST_AIRPORT_ID string, DEST string",
-    )
+    flights = spark.createDataFrame(FLIGHTS, FLIGHTS_SCHEMA)
     wl = {r.code: r.pageRank for r in W.airport_pagerank(flights, max_iterations=5).collect()}
 
     edges = flights.select(
@@ -147,6 +148,21 @@ def test_airport_pagerank_matches_reference_mode_operator(spark):
     for i, code in code_of.items():
         if i in op:
             assert wl[code] == pytest.approx(op[i], rel=1e-12)
+
+
+def test_graph_workloads_leave_the_session_cache_empty(spark, corpus_files):
+    """The graph workloads cut lineage with lazy localCheckpoints, which are
+    reclaimed with their DataFrames; a .cache() would stay in the session's
+    cache manager after the call. The cache is cleared first because the
+    test session is shared with other tests."""
+    spark.catalog.clearCache()
+    edges = read_csv(
+        spark, str(corpus_files / "edges.tsv"), sep="\t", comment="#", column_names=["src", "dst"]
+    ).select(F.col("src").cast("long"), F.col("dst").cast("long"))
+    for df in W.epinions_graph_analysis(edges).values():
+        df.collect()
+    W.airport_pagerank(spark.createDataFrame(FLIGHTS, FLIGHTS_SCHEMA), max_iterations=3).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_airline_sentiment_pipeline_single_model(spark):

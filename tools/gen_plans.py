@@ -64,7 +64,7 @@ PICKS = {
     "events_multires_rollup": "Continuous aggregate: raw events aggregate ONCE into 10min partials, materialized via lazy localCheckpoint (without it Catalyst planned a scan->aggregate chain PER union branch: 3 corpus scans, 0 ReusedExchange); 1h/1d levels re-aggregate the checkpointed partial rows (bounded by buckets x types).",
     "similarity_lsh_topk": "Multi-probe LSH (r6 Arrow-matmul rewrite): corpus signatures come from ONE MapInPandas stage (all 12 tables per batch in a single BLAS call — the r5 flat-SQL signature blew janino's 64 KB limit and fell back to interpreted, 31x slower); probe buckets XOR-expand from the broadcast query signatures; candidates via (tbl, bucket) equi-join, exact-cosine re-rank, window top-k.",
     "doc_exact_substring_removal": "Exact-substring removal: stride-1 window hashes in one explode+projection (codegen — the transform-inline HOF form measured 2x slower interpreted); the window table and token table are lazily checkpointed (each has two consumers ReuseExchange can't serve: 3 scans/3.1s -> 0.6s); dup starts merge per doc via one window pass; kept text rebuilt in-array.",
-    "graph_label_propagation": "Sync LPA round: undirected-edges x labels equi-join (both hash-partitioned on the join key) + (id,label) count + per-id argmax via min_by struct aggregate — no window function anywhere; labels lineage-cut per round.",
+    "graph_label_propagation": "Sync LPA round: undirected-edges x labels equi-join + one per-id mode(label, deterministic) aggregate with map-side partials — no window, no (id,label) count exchange; labels lineage-cut every second round.",
     "doc_semantic_decontamination": "Cogrouped FlatMapCoGroupsInPandas on the hyperplane cell key: ONE shuffle per side, per-cell train x bench BLAS matmul; quantized integer cosine makes the threshold decision bit-exact cross-engine.",
     "search_hybrid_rrf": "Hybrid retrieval: BM25 and dense-cosine subplans each keep their own scale shape (broadcast stats / broadcast probe); fusion is a full-outer join of two <=50-row frames (broadcast) + a 20-row TakeOrderedAndProject — integer RRF weights, no float summation.",
     "graph_hits_authorities": "HITS half-step: edges x scores equi-join + hash aggregate + 1-row norm broadcast; support-only iterates (zero scores filled once at the end); every twice-consumed frame lineage-cut so no upstream re-runs.",
