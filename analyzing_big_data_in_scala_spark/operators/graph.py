@@ -86,7 +86,7 @@ def canonical_undirected(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """G6 (EpinionsGraphFrameAnalysis.scala:121): triangles per vertex.
 
     Degree-ordered enumeration (the MapReduce triangle-counting standard,
@@ -100,13 +100,12 @@ def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
     quadratically. Output is identical to any other exactly-once
     enumeration: (id, triangles) for vertices in >= 1 triangle.
 
-    ``cache_oriented`` materializes the oriented edge list, used four
-    times in the plan, via a lazy localCheckpoint (reclaimed when the
-    DataFrame is GC'd — no session-lifetime cache leak). The canonical
-    edge set (3 consumers) and the degree table (2 consumers: both sides
-    of the degree join) are always materialized: without that, Catalyst
-    re-plans the full edges-from-source derivation per consumer (observed
-    20 source scans in the composed plan).
+    The oriented edge list (4 consumers), the canonical edge set (3) and
+    the degree table (2: both sides of the degree join) are materialized
+    by lazy localCheckpoints (reclaimed when the DataFrame is GC'd — no
+    session-lifetime cache leak): without them, Catalyst re-plans the
+    full edges-from-source derivation per consumer (observed 20 source
+    scans in the composed plan).
     """
     e = canonical_undirected(edges).localCheckpoint(eager=False)
     deg = (
@@ -120,6 +119,12 @@ def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
     lower_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
+    # NOT _fan_out_ready (r14): the degree-ordered orientation bounds
+    # wedge fan-out by sqrt(m), so the fixture's wedge volume is small
+    # enough that the extra exchange + 32-way task scheduling across
+    # this plan's 4 consumers measured SLOWER (5.2 s vs 2.2 s) than
+    # the coalesced 2-task compute. The link-prediction scaffold's
+    # unbounded deg(w)^2 fan-out is the shape that needs it.
     oriented = (
         e.join(da, "a")
         .join(db, "b")
@@ -127,15 +132,7 @@ def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
             F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
         )
-    )
-    if cache_oriented:
-        # NOT _fan_out_ready (r14): the degree-ordered orientation bounds
-        # wedge fan-out by sqrt(m), so the fixture's wedge volume is small
-        # enough that the extra exchange + 32-way task scheduling across
-        # this plan's 4 consumers measured SLOWER (5.2 s vs 2.2 s) than
-        # the coalesced 2-task compute. The link-prediction scaffold's
-        # unbounded deg(w)^2 fan-out is the shape that needs it.
-        oriented = oriented.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     w1 = oriented.select(F.col("u"), F.col("v").alias("x"))
     w2 = oriented.select(F.col("u"), F.col("v").alias("y"))
     # Wedges centered at u over its out-neighbors; x<y dedups the pair.

@@ -98,8 +98,11 @@ def confusion_matrix(predictions: DataFrame) -> DataFrame:
 def classification_metrics(predictions: DataFrame) -> DataFrame:
     """M9 per-label precision/recall/F1 + accuracy row
     (AirlineSentimentAnalysis.scala:108-136), computed from confusion-matrix
-    margins with joins — no driver-side MulticlassMetrics."""
-    cm = confusion_matrix(predictions).cache()
+    margins with joins — no driver-side MulticlassMetrics. The confusion
+    matrix feeds three aggregates, so a lazy localCheckpoint cuts its
+    lineage (reclaimed with the DataFrame, unlike a .cache() that would
+    stay in the session's cache manager)."""
+    cm = confusion_matrix(predictions).localCheckpoint(eager=False)
     tp = cm.filter(F.col("label") == F.col("prediction")).select(
         F.col("label").alias("klass"), F.col("cnt").alias("tp")
     )

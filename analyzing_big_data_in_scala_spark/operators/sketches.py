@@ -268,6 +268,27 @@ def kll_rollup_finalize(
     )
 
 
+def merge_sketch_cells(
+    standing: DataFrame, delta: DataFrame, keys: list[str], union: str
+) -> DataFrame:
+    """Merge a delta of per-cell sketches into a standing sketch table,
+    both keyed by `keys` with the sketch in `_sk`: a full-outer join on
+    the keys, cells present on one side pass through, colliding cells
+    merge with the binary SQL sketch function `union` (`hll_union`,
+    `kll_sketch_merge_bigint`). Sketch merge is associative and
+    order-independent, so the streaming maintenance folds apply it per
+    micro-batch in any delivery order."""
+    return standing.join(
+        delta.withColumnRenamed("_sk", "_skb"), keys, "full_outer"
+    ).select(
+        *keys,
+        F.expr(
+            "CASE WHEN _sk IS NULL THEN _skb WHEN _skb IS NULL THEN _sk "
+            f"ELSE {union}(_sk, _skb) END"
+        ).alias("_sk"),
+    )
+
+
 def theta_audience_overlap(
     events: DataFrame,
     group_col: str = "event_type",

@@ -684,41 +684,22 @@ def orders_lineitem_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFr
     description="Streaming count-min maintenance: each micro-batch tokenizes and aggregates its own cells, folded into the standing 4x256 integer grid by cell-wise addition via the exactly-once foreachBatch wrapper; the drained grid is value-identical to the batch sketch (order-independent integer merge), probed with the exact top-20 terms",
 )
 def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from functools import partial
+
     from pyspark.sql import functions as F
 
+    from ..operators.merge import apply_agg_delta
     from ..operators.sketches import cms_build, cms_estimate
     from ..operators.tfidf import token_table
     from ..streaming import stream as ST
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    state: dict = {"grid": None}
-
-    def fold(batch_df, batch_id: int) -> None:
-        delta = cms_build(token_table(batch_df))
-        if state["grid"] is None:
-            state["grid"] = delta.localCheckpoint()
-        else:
-            merged = (
-                state["grid"]
-                .withColumnRenamed("cnt", "_a")
-                .join(
-                    delta.withColumnRenamed("cnt", "_b"),
-                    ["row", "bucket"],
-                    "full_outer",
-                )
-                .select(
-                    "row",
-                    "bucket",
-                    (
-                        F.coalesce(F.col("_a"), F.lit(0).cast("long"))
-                        + F.coalesce(F.col("_b"), F.lit(0).cast("long"))
-                    ).alias("cnt"),
-                )
-            )
-            state["grid"] = merged.localCheckpoint()
-
     with ST.staged_stream(spark, docs, "doc_id") as stream:
-        ST.fold_available_now(stream, fold)
+        grid = ST.fold_deltas(
+            stream,
+            lambda batch_df: cms_build(token_table(batch_df)),
+            partial(apply_agg_delta, keys=["row", "bucket"], measures=["cnt"]),
+        )
     exact = (
         token_table(docs)
         .groupBy("term")
@@ -726,7 +707,7 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("exact_cnt"), F.asc("term"))
         .limit(20)
     )
-    est = cms_estimate(state["grid"], exact.select("term"))
+    est = cms_estimate(grid, exact.select("term"))
     out = exact.join(est, "term").select(
         "term",
         "exact_cnt",

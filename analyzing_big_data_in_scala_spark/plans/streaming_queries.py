@@ -6,6 +6,8 @@ stream/batch equivalence (SURVEY.md §5.6).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -307,10 +309,9 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.catalog import load_events
 
     ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-    state: dict = {"agg": None}
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.groupBy(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(
             F.floor(F.unix_timestamp("ts") / 600).cast("long").alias("bucket"),
             "event_type",
         ).agg(
@@ -319,21 +320,17 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value_e4"
             ),
         )
-        if state["agg"] is not None:
-            delta = apply_agg_delta(
-                state["agg"],
-                delta,
-                keys=["bucket", "event_type"],
-                measures=["n", "sum_value_e4"],
-                count_col="n",
-            )
-        state["agg"] = delta.localCheckpoint()
 
+    merge = partial(
+        apply_agg_delta,
+        keys=["bucket", "event_type"],
+        measures=["n", "sum_value_e4"],
+        count_col="n",
+    )
     with ST.staged_stream(spark, ev, "event_id") as stream:
-        ST.fold_available_now(stream, fold)
-    # The eager localCheckpoints above materialized the standing
-    # aggregate, so the result survives the staged files' removal.
-    return state["agg"]
+        # The fold's eager checkpoints materialize the standing aggregate,
+        # so the result survives the staged files' removal.
+        return ST.fold_deltas(stream, delta, merge)
 
 
 @query(
@@ -381,20 +378,11 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drain, keeping it exactly batch-equivalent.
     ev = load_events(spark, sf_dir).select("user_id", "ts", "value")
     with ST.staged_stream(spark, ev, "ts") as stream:
-        if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        result = ST.session_window_counts(stream, gap="30 minutes", watermark="3650 days")
+        result = ST.session_window_counts(
+            ST.utc_ts(stream), gap="30 minutes", watermark="3650 days"
+        )
         # Materialize before the staged files are removed.
         return ST.run_available_now(result).localCheckpoint()
-
-
-# Which stateful API the most recent streaming_user_totals run executed:
-# "tws" (transformWithStateInPandas) where protobuf exists, else "apws"
-# (applyInPandasWithState). Surfaced for tests; NOT an output column —
-# the result values are identical either way, so the oracle is
-# environment-independent.
-LAST_TOTALS_API: str | None = None
 
 
 @query(
@@ -410,27 +398,22 @@ LAST_TOTALS_API: str | None = None
         FROM events
         GROUP BY user_id
     """,
-    description="Custom stateful running totals per user, SELF-ACTIVATING across stateful APIs: transformWithStateInPandas (Spark-4 StatefulProcessor) where protobuf exists, applyInPandasWithState otherwise — identical contract and values, staged 2-file source (r14: the minimum multi-batch evidence, per-batch job-chain cost halved) so state genuinely accumulates across micro-batches",
+    description="Custom stateful running totals per user via applyInPandasWithState (two longs of state per key), staged 2-file source (r14: the minimum multi-batch evidence, per-batch job-chain cost halved) so state genuinely accumulates across micro-batches",
 )
 def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from ..sources.catalog import load_events
-    from ..streaming import stateful as SF
+    from ..streaming.stateful import user_event_totals
 
-    global LAST_TOTALS_API
-    # Staged range by event_id — no event-time semantics here, timeMode
-    # None — so update-mode state genuinely accumulates across
-    # micro-batches rather than one vacuous batch.
+    # Staged range by event_id — no event-time semantics here — so
+    # update-mode state genuinely accumulates across micro-batches rather
+    # than one vacuous batch.
     ev = load_events(spark, sf_dir).select("user_id", "event_id", "value")
     with ST.staged_stream(spark, ev, "event_id") as stream:
-        if SF.tws_available():
-            result = SF.user_event_totals_tws(stream)
-            LAST_TOTALS_API = "tws"
-        else:
-            result = SF.user_event_totals_apws(stream)
-            LAST_TOTALS_API = "apws"
-        drained = ST.run_available_now(result, output_mode="update")
+        drained = ST.run_available_now(
+            user_event_totals(stream), output_mode="update"
+        )
         # Update mode re-emits a user's RUNNING total each batch they
         # appear in; the final total is the emission with the highest
         # n_events (strictly increasing per key). Materialize before the
@@ -647,21 +630,14 @@ def streaming_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.catalog import load_events
 
     ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-    state: dict = {"stats": None}
-    measures = ["n", "sx", "sy", "sxy", "sxx", "syy"]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = trend_sufficient_stats(batch_df)
-        if state["stats"] is not None:
-            delta = apply_agg_delta(
-                state["stats"], delta,
-                keys=["event_type"], measures=measures, count_col="n",
-            )
-        state["stats"] = delta.localCheckpoint()
-
+    merge = partial(
+        apply_agg_delta,
+        keys=["event_type"], measures=["n", "sx", "sy", "sxy", "sxx", "syy"],
+        count_col="n",
+    )
     with ST.staged_stream(spark, ev, "event_id") as stream:
-        ST.fold_available_now(stream, fold)
-    return trend_from_stats(state["stats"]).localCheckpoint()
+        stats = ST.fold_deltas(stream, trend_sufficient_stats, merge)
+    return trend_from_stats(stats).localCheckpoint()
 
 
 @query(
@@ -683,37 +659,21 @@ def streaming_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Streaming sketch maintenance (the ingest half of the HLL rollup): each micro-batch aggregates to per-(type, day) HLL partials that hll_union into the standing sketch table via an exactly-once foreachBatch fold — per-batch cost tracks the batch, the standing state is KB sketches, and cross-batch dedup is free because sketch union is idempotent-per-key and order-independent",
 )
 def streaming_hll_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.sketches import merge_sketch_cells
     from ..sources.catalog import load_events
 
     ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "user_id")
-    state: dict = {"sk": None}
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.groupBy(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(
             "event_type",
             F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
-        ).agg(F.hll_sketch_agg("user_id").alias("_skb"))
-        if state["sk"] is None:
-            state["sk"] = delta.withColumnRenamed("_skb", "_sk").localCheckpoint()
-        else:
-            merged = (
-                state["sk"]
-                .join(delta, ["event_type", "day"], "full_outer")
-                .select(
-                    "event_type",
-                    "day",
-                    F.expr(
-                        "CASE WHEN _sk IS NULL THEN _skb "
-                        "WHEN _skb IS NULL THEN _sk "
-                        "ELSE hll_union(_sk, _skb) END"
-                    ).alias("_sk"),
-                )
-            )
-            state["sk"] = merged.localCheckpoint()
+        ).agg(F.hll_sketch_agg("user_id").alias("_sk"))
 
+    merge = partial(merge_sketch_cells, keys=["event_type", "day"], union="hll_union")
     with ST.staged_stream(spark, ev, "event_id") as stream:
-        ST.fold_available_now(stream, fold)
-    merged = state["sk"].groupBy("event_type").agg(
+        sketches = ST.fold_deltas(stream, delta, merge)
+    merged = sketches.groupBy("event_type").agg(
         F.hll_sketch_estimate(F.hll_union_agg("_sk")).alias("_est"),
         F.count("*").alias("n_days"),
     )
@@ -771,24 +731,20 @@ def streaming_user_value_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational_queries import HHI_PPM_SQL
 
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "user_id", "value")
-    state: dict = {"sums": None}
 
-    def fold(batch_df, batch_id: int) -> None:
-        delta = batch_df.groupBy("event_type", "user_id").agg(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("event_type", "user_id").agg(
             F.count("*").alias("n"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("s"),
         )
-        if state["sums"] is not None:
-            delta = apply_agg_delta(
-                state["sums"], delta,
-                keys=["event_type", "user_id"], measures=["n", "s"],
-                count_col="n",
-            )
-        state["sums"] = delta.localCheckpoint()
 
+    merge = partial(
+        apply_agg_delta,
+        keys=["event_type", "user_id"], measures=["n", "s"], count_col="n",
+    )
     with ST.staged_stream(spark, ev, "event_id") as stream:
-        ST.fold_available_now(stream, fold)
-    stats = state["sums"].groupBy("event_type").agg(
+        sums = ST.fold_deltas(stream, delta, merge)
+    stats = sums.groupBy("event_type").agg(
         F.count("*").alias("n_users"),
         F.sum(F.col("s") * F.col("s")).alias("s_sq"),
         F.sum("s").alias("s_tot"),
@@ -852,25 +808,20 @@ def streaming_value_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
     from ..sources.catalog import load_events
 
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "value")
-    state: dict = {"counts": None}
 
-    def fold(batch_df, batch_id: int) -> None:
-        delta = batch_df.groupBy(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(
             "event_type",
             F.round(F.col("value") * 100).cast("long").alias("cents"),
         ).agg(F.count("*").alias("n"))
-        if state["counts"] is not None:
-            delta = apply_agg_delta(
-                state["counts"], delta,
-                keys=["event_type", "cents"], measures=["n"],
-                count_col="n",
-            )
-        state["counts"] = delta.localCheckpoint()
 
+    merge = partial(
+        apply_agg_delta, keys=["event_type", "cents"], measures=["n"], count_col="n"
+    )
     with ST.staged_stream(spark, ev, "event_id") as stream:
-        ST.fold_available_now(stream, fold)
+        counts = ST.fold_deltas(stream, delta, merge)
     stats = freq_table_rank_stats_from_counts(
-        state["counts"], "event_type", "cents", "n",
+        counts, "event_type", "cents", "n",
         rank_exprs={
             "median_cents": "(n + 1) DIV 2",
             "p90_cents": "(n * 9 + 9) DIV 10",
@@ -912,38 +863,27 @@ def streaming_value_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
     description="Streaming KLL quantile maintenance (the unbounded-domain twin of streaming_value_exact_quantiles, per that contract): micro-batch per-(type, day) KLL partials fold into standing KB sketches via pairwise kll_sketch_merge under an exactly-once foreachBatch; finalize shares events_kll_value_rollup's merge + judge tree, asserting exact stream length (the exactly-once witness) and 3% rank accuracy in-plan; standing state is days x KB regardless of stream length or value domain",
 )
 def streaming_kll_value_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sketches import kll_rollup_finalize, kll_value_base
+    from ..operators.sketches import (
+        kll_rollup_finalize,
+        kll_value_base,
+        merge_sketch_cells,
+    )
     from ..sources.catalog import load_events
 
     ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-    state: dict = {"sk": None}
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = kll_value_base(batch_df).groupBy("event_type", "_day").agg(
-            F.expr("kll_sketch_agg_bigint(_ve4, 400)").alias("_skb")
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return kll_value_base(batch_df).groupBy("event_type", "_day").agg(
+            F.expr("kll_sketch_agg_bigint(_ve4, 400)").alias("_sk")
         )
-        if state["sk"] is None:
-            state["sk"] = delta.withColumnRenamed("_skb", "_sk").localCheckpoint()
-        else:
-            merged = (
-                state["sk"]
-                .join(delta, ["event_type", "_day"], "full_outer")
-                .select(
-                    "event_type",
-                    "_day",
-                    F.expr(
-                        "CASE WHEN _sk IS NULL THEN _skb "
-                        "WHEN _skb IS NULL THEN _sk "
-                        "ELSE kll_sketch_merge_bigint(_sk, _skb) END"
-                    ).alias("_sk"),
-                )
-            )
-            state["sk"] = merged.localCheckpoint()
 
+    merge = partial(
+        merge_sketch_cells, keys=["event_type", "_day"], union="kll_sketch_merge_bigint"
+    )
     # Two staged files -> two real availableNow micro-batches: the same
     # (type, day) cell arrives in both batches (files are keyed by
     # event_id, not day), so the pairwise-merge collision branch is
     # genuinely exercised, not vacuous.
     with ST.staged_stream(spark, ev, "event_id") as stream:
-        ST.fold_available_now(stream, fold)
-    return kll_rollup_finalize(state["sk"], kll_value_base(ev)).localCheckpoint()
+        sketches = ST.fold_deltas(stream, delta, merge)
+    return kll_rollup_finalize(sketches, kll_value_base(ev)).localCheckpoint()

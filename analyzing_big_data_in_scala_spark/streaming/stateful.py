@@ -54,112 +54,12 @@ def first_seen_per_user(stream: DataFrame) -> DataFrame:
     )
 
 
-def user_event_totals_tws(stream: DataFrame) -> DataFrame:
-    """Per-user running totals via `transformWithStateInPandas` — the
-    Spark-4 arbitrary-state API (StatefulProcessor + typed state handles)
-    that replaces applyInPandasWithState: named state variables
-    (ValueState/ListState/MapState), explicit init/close lifecycle, and
-    timer support the old API lacks.
-
-    ENVIRONMENT-GATED (like spark-nlp NER / CoreNLP sentiment): the TWS
-    Python runner talks to the JVM state server over protobuf, and
-    `google.protobuf` is not installed in this container — the guard below
-    fails fast with the real reason instead of a deep streaming-runner
-    stack. The plan construction and processor are complete and unit-
-    covered up to that boundary; on a cluster with protobuf present this
-    runs as written. The driver query `streaming_user_totals` registers
-    it behind :func:`tws_available`, falling back to the value-identical
-    :func:`user_event_totals_apws` — so the evidence row always runs the
-    richest stateful API the environment supports and SELF-ACTIVATES the
-    TWS path the moment protobuf appears.
-
-    Emits (user_id, n_events, sum_value_e4) with the RUNNING totals after
-    each batch (update semantics); over an availableNow drain of a static
-    fixture this equals the batch `groupBy(user_id).agg(count, sum)`.
-    sum_value_e4 integerizes value PER ROW (floor(v*1e4 + 0.5), == SQL
-    ROUND for the fixture's positive values) before summing, so the total
-    is an order-independent exact integer — the proven cross-engine
-    recipe.
-
-    Self-contained class + local imports: executor Python workers get it
-    by value, no package install needed on workers.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package (the TWS "
-            "Python worker speaks protobuf to the JVM state server); it is "
-            "not installed in this environment. The operator is complete — "
-            "run it on a cluster with `protobuf` available."
-        ) from e
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n LONG, s LONG")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-            import pandas as pd
-
-            n, s = 0, 0
-            for pdf in rows:
-                n += len(pdf)
-                s += int(
-                    np.floor(pdf["value"].to_numpy(dtype="float64") * 10000.0 + 0.5)
-                    .astype("int64")
-                    .sum()
-                )
-            if self._totals.exists():
-                prev_n, prev_s = self._totals.get()
-                n, s = n + prev_n, s + prev_s
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value_e4": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=TotalsProcessor(),
-            outputStructType="user_id long, n_events long, sum_value_e4 long",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def tws_available() -> bool:
-    """Capability probe for transformWithStateInPandas: the TWS Python
-    worker speaks protobuf to the JVM state server, so `google.protobuf`
-    must be importable. Probed with find_spec (not a bare import) so a
-    `google` namespace package without protobuf still reports False."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-def user_event_totals_apws(stream: DataFrame) -> DataFrame:
-    """Per-user running totals via applyInPandasWithState — the same
-    output contract as :func:`user_event_totals_tws` (user_id, n_events,
-    sum_value_e4 with RUNNING totals re-emitted each batch the key
-    appears in), on the API this container can execute. The
-    `streaming_user_totals` query self-activates the TWS form where
-    protobuf exists (:func:`tws_available`) and falls back here
-    otherwise, so the registered evidence row runs the richest available
-    stateful engine without ever faking the capability.
+def user_event_totals(stream: DataFrame) -> DataFrame:
+    """Per-user running totals via applyInPandasWithState: emits
+    (user_id, n_events, sum_value_e4) with the RUNNING totals re-emitted
+    each batch the key appears in (update semantics); over an
+    availableNow drain of a static fixture the last emission per key
+    equals the batch `groupBy(user_id).agg(count, sum)`.
 
     State per key: (n, s) — two longs, batch-count independent.
     sum_value_e4 integerizes PER ROW (floor(v*1e4 + 0.5) == SQL ROUND for

@@ -12,7 +12,9 @@ driver-side sink is the anti-pattern SURVEY.md §4.3.5 flags — so here:
 - transform: sentiment as a pure column expression (per-batch, no
   per-record heavyweight init — fixing §4.3.4);
 - sink: an exactly-once `foreachBatch` fold (`fold_available_now`,
-  executor-side) or an in-memory table (`run_available_now`).
+  executor-side) or an in-memory table (`run_available_now`);
+  `fold_deltas` builds on the fold to keep one standing frame current:
+  each micro-batch's delta merged into it and checkpointed.
 
 Every query is drained with the `availableNow` trigger, which processes
 what is present and stops, so results are batch-comparable. This module is
@@ -89,14 +91,19 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    stream = normalize_nanos_ts(stream)
-    # Watermarks/stateful ops require TIMESTAMP (with local tz); a fixture
-    # written as plain TIMESTAMP arrives as TIMESTAMP_NTZ. The NTZ->LTZ cast
-    # interprets the wall clock in the session timezone, so pin UTC first —
-    # that makes the instant equal to the naive value read as UTC, matching
-    # DuckDB's epoch() on the same column regardless of host timezone.
+    return utc_ts(normalize_nanos_ts(stream))
+
+
+def utc_ts(stream: DataFrame) -> DataFrame:
+    """Cast a TIMESTAMP_NTZ `ts` column to TIMESTAMP read as UTC.
+
+    Watermarks/stateful ops require TIMESTAMP (with local tz); a fixture
+    written as plain TIMESTAMP arrives as TIMESTAMP_NTZ. The NTZ->LTZ cast
+    interprets the wall clock in the session timezone, so pin UTC first —
+    that makes the instant equal to the naive value read as UTC, matching
+    DuckDB's epoch() on the same column regardless of host timezone."""
     if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        stream.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return stream
 
@@ -221,6 +228,37 @@ def fold_available_now(stream: DataFrame, fold) -> int:
         return _await_drain(q)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+class StandingFold:
+    """The foreachBatch fold behind `fold_deltas`: per micro-batch,
+    `frame` becomes `delta(batch_df)` on the first batch and
+    `merge(frame, delta(batch_df))` after that, checkpointed eagerly so
+    the standing frame never re-reads earlier batches (or the staged
+    files, which are removed after the drain)."""
+
+    def __init__(self, delta, merge):
+        self.delta = delta
+        self.merge = merge
+        self.frame: DataFrame | None = None
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        d = self.delta(batch_df)
+        if self.frame is not None:
+            d = self.merge(self.frame, d)
+        self.frame = d.localCheckpoint()
+
+
+def fold_deltas(stream: DataFrame, delta, merge) -> DataFrame:
+    """Drain `stream` through `fold_available_now` into a standing frame
+    kept by `StandingFold(delta, merge)` and return it: the incremental
+    maintenance shape, where per-batch cost tracks the batch and the
+    standing state is never recomputed from raw history. `merge` must be
+    associative and commutative over deltas (file-source delivery order is
+    not deterministic)."""
+    fold = StandingFold(delta, merge)
+    fold_available_now(stream, fold)
+    return fold.frame
 
 
 def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataFrame:

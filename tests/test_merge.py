@@ -376,11 +376,14 @@ def test_exactly_once_fold_survives_mid_drain_crash(spark, tmp_path):
 
 
 def test_incremental_rollup_fold_exactly_once_under_crash(spark, tmp_path):
-    """Failure injection over the REAL registered fold logic
-    (streaming_incremental_rollup's apply_agg_delta accumulator, not a
-    toy): crash the query after batch 1's fold commits but before its
-    offset commit, restart from the checkpoint, and the guarded standing
-    aggregate must equal the one-shot batch aggregate over all files."""
+    """Failure injection over the REAL fold the streaming folds run
+    (stream.StandingFold, the per-batch step of fold_deltas, with an
+    apply_agg_delta merge — not a toy): crash the query after batch 1's
+    fold commits but before its offset commit, restart from the
+    checkpoint, and the guarded standing aggregate must equal the
+    one-shot batch aggregate over all files."""
+    from functools import partial
+
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -388,6 +391,7 @@ def test_incremental_rollup_fold_exactly_once_under_crash(spark, tmp_path):
         apply_agg_delta,
         idempotent_foreach_batch,
     )
+    from analyzing_big_data_in_scala_spark.streaming.stream import StandingFold
 
     stage = str(tmp_path / "stage")
     for i in range(4):
@@ -395,19 +399,12 @@ def test_incremental_rollup_fold_exactly_once_under_crash(spark, tmp_path):
             [(j % 3, (i * 12 + j) * 10) for j in range(12)], "k long, v long"
         ).coalesce(1).write.mode("append").parquet(stage)
 
-    state: dict = {"agg": None}
-
-    def fold(batch_df, batch_id: int) -> None:
-        delta = batch_df.groupBy("k").agg(
+    fold = StandingFold(
+        lambda batch_df: batch_df.groupBy("k").agg(
             F.count("*").alias("n"), F.sum("v").alias("s")
-        )
-        if state["agg"] is None:
-            state["agg"] = delta.localCheckpoint()
-        else:
-            state["agg"] = apply_agg_delta(
-                state["agg"], delta, keys=["k"], measures=["n", "s"], count_col="n"
-            ).localCheckpoint()
-
+        ),
+        partial(apply_agg_delta, keys=["k"], measures=["n", "s"], count_col="n"),
+    )
     crash = {"armed": True}
     guarded = idempotent_foreach_batch(fold)
 
@@ -433,7 +430,7 @@ def test_incremental_rollup_fold_exactly_once_under_crash(spark, tmp_path):
         run_drain()
     run_drain()  # restart: batch 1 redelivers under its original id, skipped
 
-    got = sorted(map(tuple, state["agg"].collect()))
+    got = sorted(map(tuple, fold.frame.collect()))
     want = sorted(
         map(
             tuple,

@@ -119,36 +119,6 @@ def test_drop_duplicates_within_watermark_across_batches(spark, tmp_path):
     assert kept == ["a", "b", "c"]  # one survivor per key, across batches
 
 
-def test_tws_totals_env_gate(spark):
-    """transformWithStateInPandas needs protobuf; in this container the
-    operator must fail FAST with the dependency explanation (not a deep
-    streaming-runner stack). If protobuf is ever present, the plan must at
-    least construct."""
-    import importlib.util
-
-    import pytest
-
-    from analyzing_big_data_in_scala_spark.streaming import stream as ST
-    from analyzing_big_data_in_scala_spark.streaming.stateful import (
-        user_event_totals_tws,
-    )
-
-    s = ST.events_stream(spark, "/root/testdata/sf0.001")
-    # Probe the exact module the operator guard imports: a bare "google"
-    # namespace package (google-auth etc.) without protobuf must still
-    # take the gated branch.
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            user_event_totals_tws(s)
-    else:
-        df = user_event_totals_tws(s)
-        assert set(df.columns) == {"user_id", "n_events", "sum_value_e4"}
-
-
 def test_streaming_incremental_rollup_folds_multiple_batches(spark):
     """The staged multi-file source must deliver MULTIPLE micro-batches
     (a single batch would make the incremental fold vacuous), and the
@@ -207,18 +177,14 @@ def test_streaming_session_windows_match_batch_across_batches(spark):
     )
 
 
-def test_streaming_user_totals_self_activates_best_api(spark):
-    """streaming_user_totals must run TWS where protobuf exists and the
-    applyInPandasWithState twin otherwise — same values either way — and
-    the drain must equal the batch GROUP BY."""
+def test_streaming_user_totals_match_batch_group_by(spark):
+    """The stateful running-totals drain (last emission per user) must
+    equal the batch GROUP BY."""
     from analyzing_big_data_in_scala_spark.plans import QUERIES
-    from analyzing_big_data_in_scala_spark.plans import streaming_queries as SQ
     from analyzing_big_data_in_scala_spark.sources.catalog import load_events
-    from analyzing_big_data_in_scala_spark.streaming.stateful import tws_available
 
     sf = "/root/testdata/sf0.001"
     out = QUERIES["streaming_user_totals"].fn(spark, sf)
-    assert SQ.LAST_TOTALS_API == ("tws" if tws_available() else "apws")
     batch = (
         load_events(spark, sf)
         .groupBy("user_id")
@@ -288,6 +254,38 @@ def test_drains_leave_no_tables_behind(spark):
         for _ in range(3):
             assert QUERIES[name].fn(spark, SF_SMALL).count() > 0
     assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
+def test_fold_deltas_standing_frame_equals_one_shot_aggregate(spark):
+    """fold_deltas over a two-file staged stream: the standing frame equals
+    the one-shot aggregate over the whole input, and `merge` ran once for
+    every micro-batch after the first."""
+    from analyzing_big_data_in_scala_spark.operators.merge import apply_agg_delta
+    from analyzing_big_data_in_scala_spark.sources.catalog import load_events
+    from analyzing_big_data_in_scala_spark.streaming import stream as ST
+
+    from .conftest import SF_SMALL
+
+    ev = load_events(spark, SF_SMALL).select("event_id", "event_type", "value")
+
+    def delta(df):
+        return df.groupBy("event_type").agg(
+            F.count("*").alias("n"), F.sum("event_id").alias("s")
+        )
+
+    merges = []
+
+    def merge(standing, d):
+        merges.append(d)
+        return apply_agg_delta(
+            standing, d, keys=["event_type"], measures=["n", "s"], count_col="n"
+        )
+
+    with ST.staged_stream(spark, ev, "event_id") as stream:
+        got = ST.fold_deltas(stream, delta, merge)
+    assert ST.LAST_DRAIN_BATCHES is not None and ST.LAST_DRAIN_BATCHES >= 2
+    assert len(merges) == ST.LAST_DRAIN_BATCHES - 1
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, delta(ev).collect()))
 
 
 def test_drain_timeout_raises_and_cleans_up(spark, monkeypatch):

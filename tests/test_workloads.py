@@ -165,6 +165,18 @@ def test_graph_workloads_leave_the_session_cache_empty(spark, corpus_files):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_classification_metrics_leave_the_session_cache_empty(spark):
+    """The metrics' confusion matrix feeds three aggregates through a lazy
+    localCheckpoint, which is reclaimed with its DataFrame; a .cache()
+    would stay in the session's cache manager after the call."""
+    spark.catalog.clearCache()
+    preds = spark.createDataFrame(
+        [(0.0, 0.0), (1.0, 1.0), (1.0, 0.0)], "label double, prediction double"
+    )
+    assert len(M.classification_metrics(preds).collect()) == 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_airline_sentiment_pipeline_single_model(spark):
     """Pipeline stages M1-M6 + metrics M9 on a tiny labeled set (CV grid is
     exercised by the ml_sentiment_metrics query; here a single fit keeps the
